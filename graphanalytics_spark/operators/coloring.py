@@ -58,7 +58,7 @@ def greedy_coloring(
         "vid",
         F.pmod(F.xxhash64("vid", F.lit(seed)), F.lit(1 << 40)).alias("prio"),
     )
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
 
     uncolored = prio.localCheckpoint(eager=True)
     colored = spark.createDataFrame([], "vid long, color int")

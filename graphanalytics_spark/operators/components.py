@@ -30,7 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.truncate import LineageTruncator, detach
 
 
 def connected_components(
@@ -55,7 +55,14 @@ def connected_components(
     on a converged state, so up to k-1 extra no-op rounds are the only
     cost; exactness is unaffected). Unchecked rounds record changed=-1 in
     metrics."""
-    sym = symmetrize(edges_canon).select("src", "dst")
+    # hard cadence 8 (was 5): the every-2-round stop-test count already
+    # finalizes the lazy localCheckpoints, so more frequent hard resets
+    # only added parquet round-trips (order-balanced 5-vs-8 A/B: wash at
+    # sf0.1, strictly fewer V-sized writes at scale; chains stay ≤ 7,
+    # under the measured ~9-link planning-degradation onset)
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
+    # leaf input plan: the caller's plan stays out of every round's plan
+    sym = symmetrize(detach(edges_canon)).select("src", "dst")
     if partitions is None:
         try:
             partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -67,12 +74,6 @@ def connected_components(
         sym = sym.repartition(partitions, "src")
     sym = sym.persist()
     n_edges = sym.count()
-    # hard cadence 8 (was 5): the every-2-round stop-test count already
-    # finalizes the lazy localCheckpoints, so more frequent hard resets
-    # only added parquet round-trips (order-balanced 5-vs-8 A/B: wash at
-    # sf0.1, strictly fewer V-sized writes at scale; chains stay ≤ 7,
-    # under the measured ~9-link planning-degradation onset)
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
     check_every = max(1, check_every)
 
     if initial_state is not None:
@@ -125,9 +126,9 @@ def connected_components(
             (F.col("new_label") != F.col("old")).alias("changed"),
         )
         # per-iteration lineage truncation (plans/truncate.py: lazy
-        # localCheckpoint piggybacking on the count below + periodic hard
-        # parquet reset — chained localCheckpoints alone still degrade
-        # exponentially in Spark 4.1)
+        # localCheckpoint whose result stage the count below computes +
+        # periodic hard parquet reset — chained localCheckpoints alone
+        # still degrade exponentially in Spark 4.1)
         new_state = truncator.truncate(new_state, it, stream="state")
         n_changed = -1
         if it % check_every == 0 or it == max_iter:

@@ -50,7 +50,7 @@ def hits(
         .distinct()
         .persist()
     )
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
     # initial scores are a constant projection over the cached vertex set:
     # no persist of their own (the old per-call cache was never released)
     h = verts.select("vid", F.lit(1.0).alias("score"))

@@ -45,7 +45,7 @@ def neighborhood_function(
     per round) — the per-vertex sketch table never leaves the cluster."""
     sym = symmetrize(edges_canon).select("src", "dst").persist()
     sym.count()
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
 
     state = (
         sym.select(F.col("src").alias("vid"))
@@ -129,7 +129,7 @@ def hyperball_per_vertex(
     the lg_k knob exactly as for the neighborhood function."""
     sym = symmetrize(edges_canon).select("src", "dst").persist()
     sym.count()
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
 
     state = (
         sym.select(F.col("src").alias("vid"))

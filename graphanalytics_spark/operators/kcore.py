@@ -59,7 +59,7 @@ def kcore(
     count in the edges slot, so derived edges/s throughput is honest."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
     active = edges_canon.select("src", "dst").persist()
     n_edges = active.count()  # one-time setup action
     first = active

@@ -116,7 +116,7 @@ def ktruss(
     if k < 2:
         raise ValueError("k must be >= 2 (k=2 keeps every edge)")
     need = k - 2
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
     # peel in (degree, id)-oriented space: bounds every round's wedge
     # fan-out by O(√m) where the former src<dst id-orientation was
     # quadratic on a mid-id mega-hub; ids are mapped back on return

@@ -25,7 +25,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.truncate import LineageTruncator, detach
 
 
 def label_propagation(
@@ -45,7 +45,12 @@ def label_propagation(
     ``check_every``: the no-change stop test runs every k sweeps (sweeps
     are idempotent on a converged labeling, so semantics are unchanged —
     same driver-action economics as pagerank/components)."""
-    sym = symmetrize(edges_canon)
+    # hard cadence 8 (was 5): the every-2-sweep stop-test count already
+    # finalizes the lazy localCheckpoints; order-balanced 5-vs-8 A/B had
+    # 8 faster in all four pairs (3.0-3.2 vs 3.2-4.0 s warm at sf0.1)
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
+    # leaf input plan: the caller's plan stays out of every sweep's plan
+    sym = symmetrize(detach(edges_canon))
     if partitions is None:
         try:
             partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -56,10 +61,6 @@ def label_propagation(
         sym = sym.repartition(partitions, "src")
     sym = sym.persist()
     n_edges = sym.count()
-    # hard cadence 8 (was 5): the every-2-sweep stop-test count already
-    # finalizes the lazy localCheckpoints; order-balanced 5-vs-8 A/B had
-    # 8 faster in all four pairs (3.0-3.2 vs 3.2-4.0 s warm at sf0.1)
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
     check_every = max(1, check_every)
 
     if initial_state is not None:

@@ -3,12 +3,17 @@
 Two implementations with identical semantics:
 
 - ``pagerank`` — pure DataFrame gather-scatter: the per-iteration gather is
-  ``links JOIN state ON src`` → ``groupBy(dst).sum()``. Catalyst/AQE pick
-  the join strategy; map-side partial aggregation absorbs hub-vertex skew.
-  This is the plan you want on a 1000-executor cluster: the static
-  ``links`` side (src, dst, weight/out-degree) is hash-partitioned on
-  ``src`` once and persisted, so every iteration reuses the partitioning
-  and only the small state table moves.
+  ``links JOIN state ON src`` → ``groupBy(dst).sum()``, then the merge
+  ``state LEFT JOIN contribs ON vid``; map-side partial aggregation
+  absorbs hub-vertex skew. The static ``links`` side (src, dst,
+  weight/out-degree) is hash-partitioned on ``src`` once and persisted,
+  and both joins are pinned to a shuffled-hash join built on the vertex
+  state. So per superstep the state is exchanged on ``vid``, the links
+  are read in place, and neither side is ever broadcast. Without the pin
+  the choice is AQE's, made from size estimates: a checkpointed state's
+  estimate compounds every superstep (38 KB → 93 GB → 2.8e17 B in three
+  steps), so AQE re-broadcast the whole static side every superstep
+  whenever it fit under the broadcast threshold.
 
 - ``pagerank_csr`` — per-partition CSR gather-scatter inside a cogrouped
   Arrow UDF: edges are blocked by hash(src), each block's adjacency is a
@@ -43,7 +48,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.truncate import LineageTruncator, detach
 
 
 @dataclass
@@ -104,6 +109,23 @@ def _prepare_links(edges: DataFrame, partitions: int | None):
     return links.persist()
 
 
+def _gather(links: DataFrame, state: DataFrame) -> DataFrame:
+    """``state`` plus ``gathered`` = Σ rank(src)·frac over each vertex's
+    in-edges (null for a vertex without in-edges).
+
+    Both joins are pinned to a shuffled hash join built on the state: the
+    persisted links keep their ``src`` partitioning and are read in place,
+    and only the state is exchanged (see the module docstring)."""
+    state = state.hint("shuffle_hash")
+    contribs = (
+        links.join(state, links.src == state.vid)
+        .select(links.dst.alias("vid"), (F.col("frac") * F.col("rank")).alias("c"))
+        .groupBy("vid")
+        .agg(F.sum("c").alias("gathered"))
+    )
+    return state.join(contribs, "vid", "left")
+
+
 def pagerank(
     spark: SparkSession,
     edges: DataFrame,
@@ -134,11 +156,15 @@ def pagerank(
     ``check_every`` iterations (semantics-preserving: a converged state
     stays converged under extra sweeps, and fixed-iteration runs with
     tol=0 never check), and the hard lineage reset every
-    ``checkpoint_every``. Unchecked iterations chain lazy localCheckpoints
-    that the next action materializes in one fused job."""
+    ``checkpoint_every``. Every superstep still runs its shuffle stages
+    when it is truncated (see ``LineageTruncator.truncate``).
+
+    The input is detached from the caller's plan first (plans/truncate.py
+    ``detach``), so no superstep plan carries that plan along."""
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
+    edges = detach(edges)
     links = _prepare_links(edges, partitions)
     n_links = links.count()  # materializes the persisted static side
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
     check_every = max(1, check_every)
 
     # vertex set + static dangling flag (no out-edges) in ONE aggregation:
@@ -173,13 +199,7 @@ def pagerank(
     delta = float("inf")
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
-        contribs = (
-            links.join(state, links.src == state.vid)
-            .select(links.dst.alias("vid"), (F.col("frac") * F.col("rank")).alias("c"))
-            .groupBy("vid")
-            .agg(F.sum("c").alias("gathered"))
-        )
-        joined = state.join(contribs, "vid", "left")
+        joined = _gather(links, state)
         if has_dangling:
             # dangling mass as an in-plan broadcast scalar: no driver action
             dm = state.filter("dangling").agg(
@@ -251,6 +271,8 @@ def pagerank_csr(
     """
     import numpy as np  # noqa: F401  (imported for the UDF closure)
 
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
+    edges = detach(edges)
     out = edges.groupBy("src").agg(F.sum("weight").alias("wdeg"))
     try:
         sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -270,7 +292,6 @@ def pagerank_csr(
         .persist()
     )
     n_links = links.count()
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
     check_every = max(1, check_every)
 
     # fused vertex-set + dangling-flag aggregation (see pagerank)
@@ -375,7 +396,6 @@ def pagerank_fixed(
         damping=damping,
         tol=0.0,
         max_iter=iterations,
-        checkpoint_every=0,
     )
     return r.select("vid", F.round("rank", 9).alias("rank"))
 
@@ -415,11 +435,12 @@ def personalized_pagerank(
     with base = 1/|S| on seeds, 0 elsewhere — dangling mass re-enters
     through the reset distribution, so Σ rank = 1 is preserved.
 
-    Same plan economics as ``pagerank``: static links side partitioned
-    once, only vertex state moves per iteration."""
+    Same plan economics as ``pagerank``: detached input, static links
+    side partitioned once, gather joins built on the exchanged state."""
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
+    edges = detach(edges)
     links = _prepare_links(edges, None)
     n_links = links.count()
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
     check_every = max(1, check_every)
 
     # fused vertex-set + dangling-flag aggregation (see pagerank)
@@ -455,13 +476,7 @@ def personalized_pagerank(
     delta = float("inf")
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
-        contribs = (
-            links.join(state, links.src == state.vid)
-            .select(links.dst.alias("vid"), (F.col("frac") * F.col("rank")).alias("c"))
-            .groupBy("vid")
-            .agg(F.sum("c").alias("gathered"))
-        )
-        joined = state.join(contribs, "vid", "left")
+        joined = _gather(links, state)
         if has_dangling:
             dm = state.filter("dangling").agg(
                 F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")

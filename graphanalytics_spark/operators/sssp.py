@@ -56,7 +56,7 @@ def sssp(
     if adj.filter(F.col("weight") < 0).limit(1).count() > 0:
         adj.unpersist()
         raise ValueError("sssp requires non-negative edge weights")
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
 
     state = spark.createDataFrame(
         [(int(source), 0.0)], "vid long, dist double"

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
+from graphanalytics_spark.plans.truncate import detach
 
 
 def _oriented(edges_canon: DataFrame) -> DataFrame:
@@ -65,8 +66,12 @@ def _triangles(edges_canon: DataFrame) -> DataFrame:
     DataFrame is lazy (the caller runs the action), so this function has
     no point at which it could unpersist a cache entry. Checkpoint blocks
     are RDD-scoped and reclaimed by the ContextCleaner when the result is
-    dropped; a CacheManager entry would leak until session end."""
-    a = _oriented(edges_canon).localCheckpoint(eager=True)
+    dropped; a CacheManager entry would leak until session end.
+
+    The input is detached first (plans/truncate.py): the orientation's
+    degree aggregation and two joins then plan over a leaf, not over the
+    caller's plan three times."""
+    a = _oriented(detach(edges_canon)).localCheckpoint(eager=True)
     nbrs = a.groupBy(F.col("a").alias("v")).agg(F.collect_list("b").alias("ns"))
     # inner joins: an edge whose head has no out-neighbors closes no
     # triangle (the wedge plan produced no (u,v,·) wedges there either)

@@ -296,3 +296,43 @@ def test_edge_cut_unassigned_counts_as_cut(spark):
     assign = spark.createDataFrame([(0, 0), (1, 0)], "vid long, part long")
     cut = bfs.edge_cut(ec, assign).first()
     assert (cut.n_edges, cut.n_cut) == (2, 1)  # edge (1,2): dst unassigned
+
+
+def test_detached_input_survives_source_unpersist(spark, rgraph):
+    """``detach`` keeps the input's RDD lineage: with the source's cached
+    blocks dropped, the detached frame recomputes them, and PageRank, CC
+    and triangles still match their oracles."""
+    from graphanalytics_spark.plans.truncate import detach
+
+    ec, edges, n = rgraph
+    src = ec.select("src", "dst", "weight").persist()
+    src.count()
+    d = detach(src)
+    src.unpersist(blocking=True)
+    assert d._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LogicalRDD"
+
+    sym = [(a, b, w) for a, b, w in edges] + [(b, a, w) for a, b, w in edges]
+    ranks = {r.vid: r["rank"] for r in pagerank.pagerank(spark, graph.symmetrize(d), tol=1e-7).collect()}
+    assert np.allclose(
+        [ranks[i] for i in range(n)], oracles.pagerank_np(sym, n, tol=1e-7), atol=1e-6
+    )
+    cc = {r.vid: r.component for r in components.connected_components(spark, d).collect()}
+    assert cc == oracles.components_np([(a, b) for a, b, _ in edges], list(range(n)))
+    tri = triangles.triangle_count(spark, d).first()[0]
+    assert tri == oracles.triangles_np([(a, b) for a, b, _ in edges])
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda spark, ec: pagerank.pagerank(spark, graph.symmetrize(ec), checkpoint_every=0),
+        lambda spark, ec: components.connected_components(spark, ec, checkpoint_every=0),
+        lambda spark, ec: labelprop.label_propagation(spark, ec, checkpoint_every=-1),
+    ],
+    ids=["pagerank", "components", "labelprop"],
+)
+def test_checkpoint_every_below_one_is_rejected(spark, rgraph, call):
+    """A cadence below 1 is an error, not a silent fallback to some other
+    cadence than the documented default."""
+    with pytest.raises(ValueError, match="checkpoint_every"):
+        call(spark, rgraph[0])

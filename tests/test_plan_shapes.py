@@ -4,6 +4,7 @@ the scan, top-K compiles to TakeOrderedAndProject, and the flagship graph
 derivation does partial aggregation before its exchange."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from graphanalytics_spark import graph
 from graphanalytics_spark.functions import similarity
@@ -206,3 +207,163 @@ def test_assortativity_single_aggregation(spark):
     assert "CartesianProduct" not in plan
     # one partial+final HashAggregate pair carrying all five sums
     assert plan.count("sum(") >= 5
+
+
+# --- superstep plans of the iterative operators ---------------------------
+
+
+def _superstep_plan(monkeypatch, run, superstep=3):
+    """Physical plan (a JVM SparkPlan) of one superstep of ``run()``: the
+    frame handed to the lineage truncator at that superstep, read after
+    the truncator has executed it, so AQE's final plan is in place."""
+    from graphanalytics_spark.plans import truncate
+
+    seen = {}
+    orig = truncate.LineageTruncator.truncate
+
+    def spy(self, df, iteration, stream=None):
+        out = orig(self, df, iteration, stream)
+        seen[iteration] = df
+        return out
+
+    monkeypatch.setattr(truncate.LineageTruncator, "truncate", spy)
+    run()
+    return seen[superstep]._jdf.queryExecution().executedPlan()
+
+
+def _kids(node):
+    """Children of a physical plan node, looking through AQE wrappers (an
+    adaptive plan and its query stages are leaves) but not into cached
+    relations: an InMemoryTableScan's cached plan is not part of the
+    superstep's work."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _walk(node):
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        yield n
+        stack.extend(_kids(n))
+
+
+def _exchanges_over(plan, is_target):
+    """Exchange nodes whose input reaches a target node through unary
+    operators only (no join, aggregation or other exchange in between):
+    an exchange that "sits over" the target, shuffling or broadcasting it."""
+    stops = ("Join", "Aggregate", "Exchange")
+    hits = []
+    for ex in _walk(plan):
+        if not ex.getClass().getSimpleName().endswith("ExchangeExec"):
+            continue
+        frontier = _kids(ex)
+        while frontier:
+            n = frontier.pop()
+            if is_target(n):
+                hits.append(ex.nodeName())
+            elif not any(s in n.getClass().getSimpleName() for s in stops):
+                frontier.extend(_kids(n))
+    return hits
+
+
+def _symmetric_graph(spark):
+    # every vertex has out-edges, so PageRank plans no dangling-mass
+    # broadcast: any BroadcastExchange in its superstep is a join choice
+    pairs = [(i, (i * 7 + 1) % 300) for i in range(600)] + [(i, i + 1) for i in range(299)]
+    return graph.canonicalize(
+        spark.createDataFrame(
+            [(a % 300, b, 1.0) for a, b in pairs], "src long, dst long, weight double"
+        )
+    )
+
+
+def _assert_links_read_in_place(spark, monkeypatch):
+    from graphanalytics_spark.operators import pagerank
+
+    sym = graph.symmetrize(_symmetric_graph(spark))
+    plan = _superstep_plan(
+        monkeypatch, lambda: pagerank.pagerank(spark, sym, tol=0.0, max_iter=4).count()
+    )
+    names = [n.getClass().getSimpleName() for n in _walk(plan)]
+    assert "BroadcastExchangeExec" not in names, plan.toString()
+
+    def is_links(n):
+        return n.getClass().getSimpleName() == "InMemoryTableScanExec" and (
+            "frac#" in n.output().toString()
+        )
+
+    assert any(is_links(n) for n in _walk(plan)), plan.toString()
+    assert _exchanges_over(plan, is_links) == [], plan.toString()
+
+
+def test_pagerank_superstep_reads_links_in_place(spark, monkeypatch):
+    """From superstep 3 on, the persisted src-partitioned links are neither
+    broadcast nor re-shuffled: both gather joins build on the state."""
+    _assert_links_read_in_place(spark, monkeypatch)
+
+
+def test_pagerank_superstep_reads_links_in_place_without_broadcast(spark, monkeypatch):
+    """The same plan when broadcasting is off (the regime of graphs far
+    over the broadcast threshold), where a planner free to choose would
+    shuffle-join both sides."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        _assert_links_read_in_place(spark, monkeypatch)
+    finally:
+        spark.conf.set(key, before)
+
+
+def _chained_input(spark):
+    """Canonical edges under a 16-deep union/select chain: a caller's plan
+    that grows with every step of its own pipeline."""
+    edges = _symmetric_graph(spark)
+    extra = spark.createDataFrame(
+        [(10**6 + k, 10**6 + k + 1, 1.0) for k in range(16)],
+        "src long, dst long, weight double",
+    )
+    for k in range(16):
+        edges = edges.union(extra.filter(F.col("src") == 10**6 + k)).select(
+            "src", "dst", "weight"
+        )
+    return edges
+
+
+@pytest.mark.parametrize("operator", ["pagerank", "components", "labelprop"])
+def test_static_side_plans_as_leaf_scan(spark, monkeypatch, operator):
+    """The persisted static side is built over a leaf scan of the input,
+    not over the caller's chain: its cached plan reads one detached RDD
+    (twice where the operator symmetrizes it) and no union branch."""
+    from graphanalytics_spark.operators import components, labelprop, pagerank
+
+    edges = _chained_input(spark)
+    run = {
+        "pagerank": lambda: pagerank.pagerank(
+            spark, graph.symmetrize(edges), tol=0.0, max_iter=4
+        ).count(),
+        "components": lambda: components.connected_components(
+            spark, edges, max_iter=4
+        ).count(),
+        "labelprop": lambda: labelprop.label_propagation(
+            spark, edges, max_iter=4
+        ).count(),
+    }[operator]
+    plan = _superstep_plan(monkeypatch, run)
+    # from superstep 3 the state is a checkpoint, so every cache scan left
+    # in the plan reads the static side (CC's pointer jump reads it twice)
+    scans = [
+        n for n in _walk(plan) if n.getClass().getSimpleName() == "InMemoryTableScanExec"
+    ]
+    assert scans, plan.toString()
+    for scan in scans:
+        cached = scan.relation().cachedPlan()
+        leaves = [n.getClass().getSimpleName() for n in _walk(cached) if not _kids(n)]
+        assert 1 <= len(leaves) <= 2, cached.toString()
+        assert set(leaves) == {"RDDScanExec"}, cached.toString()
