@@ -40,6 +40,7 @@ def hits(
     L2-normalized (Σ authority² = Σ hub² = 1 up to rounding)."""
     if iterations < 1:
         raise ValueError("hits needs iterations >= 1")
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
     links = edges.select("src", "dst", "weight").persist()
     # persisted: the vertex set is read by all 2·iterations half-step
     # left-joins — unpersisted it re-ran the distinct-over-E aggregation
@@ -50,7 +51,6 @@ def hits(
         .distinct()
         .persist()
     )
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
     # initial scores are a constant projection over the cached vertex set:
     # no persist of their own (the old per-call cache was never released)
     h = verts.select("vid", F.lit(1.0).alias("score"))

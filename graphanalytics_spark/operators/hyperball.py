@@ -43,9 +43,9 @@ def neighborhood_function(
     curve as [{"t": t, "n_pairs_est": float, "wall_s": s}, ...] with t=0
     counting the |V| self-pairs. The curve is driver-side tiny (one float
     per round) — the per-vertex sketch table never leaves the cluster."""
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
     sym = symmetrize(edges_canon).select("src", "dst").persist()
     sym.count()
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
 
     state = (
         sym.select(F.col("src").alias("vid"))
@@ -127,9 +127,9 @@ def hyperball_per_vertex(
     sum_dist 0). In HLL sparse mode (small components) the estimates are
     exact — gated by the brute-force equality test; at scale accuracy is
     the lg_k knob exactly as for the neighborhood function."""
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
     sym = symmetrize(edges_canon).select("src", "dst").persist()
     sym.count()
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
 
     state = (
         sym.select(F.col("src").alias("vid"))

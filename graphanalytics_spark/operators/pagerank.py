@@ -7,13 +7,14 @@ Two implementations with identical semantics:
   ``state LEFT JOIN contribs ON vid``; map-side partial aggregation
   absorbs hub-vertex skew. The static ``links`` side (src, dst,
   weight/out-degree) is hash-partitioned on ``src`` once and persisted,
-  and both joins are pinned to a shuffled-hash join built on the vertex
-  state. So per superstep the state is exchanged on ``vid``, the links
-  are read in place, and neither side is ever broadcast. Without the pin
-  the choice is AQE's, made from size estimates: a checkpointed state's
+  so a shuffled join reads it in place and exchanges only the state.
+  The join strategy is Catalyst/AQE's: a checkpointed state's size
   estimate compounds every superstep (38 KB → 93 GB → 2.8e17 B in three
-  steps), so AQE re-broadcast the whole static side every superstep
-  whenever it fit under the broadcast threshold.
+  steps), so while the links fit under the broadcast threshold they are
+  broadcast every superstep instead. Pinning both joins to a
+  shuffled-hash join built on the state removed those broadcasts but not
+  end-to-end time (8-copy co-purchase graph, 4 cores, 10 ABBA pairs:
+  wall 1.009× the unpinned plan), so the choice stays the planner's.
 
 - ``pagerank_csr`` — per-partition CSR gather-scatter inside a cogrouped
   Arrow UDF: edges are blocked by hash(src), each block's adjacency is a
@@ -111,12 +112,7 @@ def _prepare_links(edges: DataFrame, partitions: int | None):
 
 def _gather(links: DataFrame, state: DataFrame) -> DataFrame:
     """``state`` plus ``gathered`` = Σ rank(src)·frac over each vertex's
-    in-edges (null for a vertex without in-edges).
-
-    Both joins are pinned to a shuffled hash join built on the state: the
-    persisted links keep their ``src`` partitioning and are read in place,
-    and only the state is exchanged (see the module docstring)."""
-    state = state.hint("shuffle_hash")
+    in-edges (null for a vertex without in-edges)."""
     contribs = (
         links.join(state, links.src == state.vid)
         .select(links.dst.alias("vid"), (F.col("frac") * F.col("rank")).alias("c"))
@@ -436,7 +432,7 @@ def personalized_pagerank(
     through the reset distribution, so Σ rank = 1 is preserved.
 
     Same plan economics as ``pagerank``: detached input, static links
-    side partitioned once, gather joins built on the exchanged state."""
+    side partitioned once, only vertex state moves per iteration."""
     truncator = LineageTruncator(spark, hard_every=checkpoint_every)
     edges = detach(edges)
     links = _prepare_links(edges, None)

@@ -48,6 +48,7 @@ def sssp(
     """Shortest weighted distance from ``source``: DataFrame(vid, dist)
     over reachable vertices (dist(source) = 0). Undirected by default
     (edges symmetrized); weights must be non-negative."""
+    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
     adj = (
         edges.select("src", "dst", "weight")
         if directed
@@ -56,7 +57,6 @@ def sssp(
     if adj.filter(F.col("weight") < 0).limit(1).count() > 0:
         adj.unpersist()
         raise ValueError("sssp requires non-negative edge weights")
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
 
     state = spark.createDataFrame(
         [(int(source), 0.0)], "vid long, dist double"

@@ -9,11 +9,14 @@ from graphanalytics_spark import fixtures, graph
 from graphanalytics_spark.operators import (
     components,
     contraction,
+    hits,
+    hyperball,
     labelprop,
     mis,
     modularity,
     nhop,
     pagerank,
+    sssp,
     triangles,
 )
 from tests import oracles
@@ -328,11 +331,22 @@ def test_detached_input_survives_source_unpersist(spark, rgraph):
         lambda spark, ec: pagerank.pagerank(spark, graph.symmetrize(ec), checkpoint_every=0),
         lambda spark, ec: components.connected_components(spark, ec, checkpoint_every=0),
         lambda spark, ec: labelprop.label_propagation(spark, ec, checkpoint_every=-1),
+        lambda spark, ec: sssp.sssp(spark, ec, 0, checkpoint_every=0),
+        lambda spark, ec: hits.hits(spark, ec, checkpoint_every=0),
+        lambda spark, ec: hyperball.neighborhood_function(spark, ec, checkpoint_every=0),
+        lambda spark, ec: hyperball.hyperball_per_vertex(spark, ec, checkpoint_every=0),
     ],
-    ids=["pagerank", "components", "labelprop"],
+    ids=["pagerank", "components", "labelprop", "sssp", "hits", "neighborhood", "per_vertex"],
 )
 def test_checkpoint_every_below_one_is_rejected(spark, rgraph, call):
     """A cadence below 1 is an error, not a silent fallback to some other
-    cadence than the documented default."""
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        call(spark, rgraph[0])
+    cadence than the documented default; it is raised before any job runs,
+    so no static side is persisted and left behind."""
+    sc = spark.sparkContext
+    sc.setJobGroup("cadence_check", "invalid checkpoint_every")
+    try:
+        with pytest.raises(ValueError, match="checkpoint_every"):
+            call(spark, rgraph[0])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("cadence_check")) == []

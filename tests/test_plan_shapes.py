@@ -274,7 +274,7 @@ def _exchanges_over(plan, is_target):
 
 def _symmetric_graph(spark):
     # every vertex has out-edges, so PageRank plans no dangling-mass
-    # broadcast: any BroadcastExchange in its superstep is a join choice
+    # broadcast
     pairs = [(i, (i * 7 + 1) % 300) for i in range(600)] + [(i, i + 1) for i in range(299)]
     return graph.canonicalize(
         spark.createDataFrame(
@@ -283,15 +283,22 @@ def _symmetric_graph(spark):
     )
 
 
-def _assert_links_read_in_place(spark, monkeypatch):
+def test_pagerank_superstep_reads_links_in_place_without_broadcast(spark, monkeypatch):
+    """From superstep 3 on, when broadcasting is off (the regime of graphs
+    far over the broadcast threshold), the persisted src-partitioned links
+    are read in place: no exchange sits over them, only the state moves."""
     from graphanalytics_spark.operators import pagerank
 
-    sym = graph.symmetrize(_symmetric_graph(spark))
-    plan = _superstep_plan(
-        monkeypatch, lambda: pagerank.pagerank(spark, sym, tol=0.0, max_iter=4).count()
-    )
-    names = [n.getClass().getSimpleName() for n in _walk(plan)]
-    assert "BroadcastExchangeExec" not in names, plan.toString()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        sym = graph.symmetrize(_symmetric_graph(spark))
+        plan = _superstep_plan(
+            monkeypatch, lambda: pagerank.pagerank(spark, sym, tol=0.0, max_iter=4).count()
+        )
+    finally:
+        spark.conf.set(key, before)
 
     def is_links(n):
         return n.getClass().getSimpleName() == "InMemoryTableScanExec" and (
@@ -302,23 +309,26 @@ def _assert_links_read_in_place(spark, monkeypatch):
     assert _exchanges_over(plan, is_links) == [], plan.toString()
 
 
-def test_pagerank_superstep_reads_links_in_place(spark, monkeypatch):
-    """From superstep 3 on, the persisted src-partitioned links are neither
-    broadcast nor re-shuffled: both gather joins build on the state."""
-    _assert_links_read_in_place(spark, monkeypatch)
+def test_detach_keeps_planning_statistics(spark):
+    """A detached frame is planned from its source's size estimate, so a
+    small persisted input keeps its planning-time broadcast (triangle
+    orientation's degree joins and pagerank_csr's out-degree join are
+    such joins over the detached input)."""
+    from graphanalytics_spark.plans.truncate import detach
 
-
-def test_pagerank_superstep_reads_links_in_place_without_broadcast(spark, monkeypatch):
-    """The same plan when broadcasting is off (the regime of graphs far
-    over the broadcast threshold), where a planner free to choose would
-    shuffle-join both sides."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    before = spark.conf.get(key)
-    spark.conf.set(key, "-1")
+    edges = _symmetric_graph(spark).persist()
+    edges.count()
     try:
-        _assert_links_read_in_place(spark, monkeypatch)
+        d = detach(edges)
+
+        def size(df):
+            return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+        assert size(d) == size(edges)
+        deg = d.groupBy("src").agg(F.sum("weight").alias("wdeg"))
+        assert "BroadcastHashJoin" in _plan(d.join(deg, "src"))
     finally:
-        spark.conf.set(key, before)
+        edges.unpersist()
 
 
 def _chained_input(spark):

@@ -5,15 +5,17 @@ Runs ``perfbench/run.py`` from checkout A and checkout B in ABBA order
 workload and seed, so drift on the host (load from neighbours, steal)
 falls on both sides alike. For every end-to-end metric declared in A's
 ``BENCHMARK.json`` it prints each side's median and quartiles, B's median
-over A's, and in how many pairs B beat A. Each checkout runs its own
-benchmark code against its own package; nothing in either tree is
-changed beyond what ``perfbench/run.py`` writes under ``perfbench/.work``.
+over A's, and in how many pairs B beat A. Every run lasts the
+``run_seconds`` that A's ``BENCHMARK.json`` declares. Each checkout runs
+its own benchmark code against its own package; nothing in either tree
+is changed beyond what ``perfbench/run.py`` writes under
+``perfbench/.work``.
 
 Usage (from the repository root; make the second checkout with
 ``git worktree add`` or ``git clone``):
 
     python3 tools/ab_bench.py --a ../parent --b . --workload copurchase_x8 \\
-        --seed 11 --pairs 10 [--seconds 10] [--jsonl runs.jsonl]
+        --seed 11 --pairs 10
 """
 
 from __future__ import annotations
@@ -24,7 +26,6 @@ import os
 import statistics
 import subprocess
 import sys
-import time
 
 
 def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
@@ -37,7 +38,6 @@ def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
         "--seconds", str(seconds),
         "--trace", "0",
     ]
-    t0 = time.monotonic()
     proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
     if proc.returncode != 0 or len(lines) < 2:
@@ -49,7 +49,6 @@ def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
         "failed": result["failed"],
         "attempted": result["attempted"],
         "detail": json.loads(lines[-2]),
-        "run_s": time.monotonic() - t0,
     }
 
 
@@ -88,20 +87,19 @@ def main(argv=None) -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seconds", type=float, default=10.0)
-    ap.add_argument("--jsonl", help="append every run's record to this file")
     args = ap.parse_args(argv)
 
     trees = {"a": os.path.abspath(args.a), "b": os.path.abspath(args.b)}
     with open(os.path.join(trees["a"], "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
+        bench = json.load(f)
+    metrics, seconds = bench["end_to_end"], bench["run_seconds"]
 
     pairs = []
     for i in range(args.pairs):
         order = ("a", "b") if i % 2 == 0 else ("b", "a")
         pair = {}
         for side in order:
-            r = run_once(trees[side], args.workload, args.seed, args.seconds)
+            r = run_once(trees[side], args.workload, args.seed, seconds)
             pair[side] = r
             shown = " ".join(f"{m['name']}={r['values'][m['name']]:.2f}" for m in metrics)
             print(
@@ -110,10 +108,6 @@ def main(argv=None) -> int:
                 file=sys.stderr,
                 flush=True,
             )
-            if args.jsonl:
-                with open(args.jsonl, "a") as f:
-                    rec = {"pair": i, "side": side, "tree": trees[side], **r}
-                    f.write(json.dumps(rec) + "\n")
         pairs.append(pair)
 
     print(
