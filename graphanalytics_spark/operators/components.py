@@ -14,8 +14,9 @@ Each round:
 2. pointer jumping: label''(v) = label(label'(v)) — a self-join that
    halves tree heights, giving O(log diameter) total rounds instead of
    O(diameter).
-Stop when no label changed. Lineage is truncated with localCheckpoint every
-``checkpoint_every`` rounds — mandatory for iterative Spark plans.
+Stop when no label changed. The rounds run on the shared superstep loop
+(plans/superstep.py), which truncates the state's lineage every round —
+mandatory for iterative Spark plans.
 
 Scale: the edge table is partitioned on src once and persisted; the state
 table is the only per-round shuffle. At 10^12 edges this is the classic
@@ -25,12 +26,26 @@ even for path-like graphs.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.truncate import LineageTruncator, detach
+from graphanalytics_spark.plans.superstep import Supersteps, no_label_changed, static_side
+from graphanalytics_spark.plans.truncate import detach
+
+
+def initial_labels(sym: DataFrame, initial_state: DataFrame | None) -> DataFrame:
+    """Persisted (vid, label) state to start a labeling from: the resumed
+    ``initial_state`` (its ``label`` or ``component`` column), else every
+    vertex of ``sym`` labeled with its own id."""
+    if initial_state is not None:
+        label = "label" if "label" in initial_state.columns else "component"
+        return initial_state.select("vid", F.col(label).alias("label")).persist()
+    return (
+        sym.select(F.col("src").alias("vid"))
+        .distinct()
+        .select("vid", F.col("vid").alias("label"))
+        .persist()
+    )
 
 
 def connected_components(
@@ -38,7 +53,6 @@ def connected_components(
     edges_canon: DataFrame,
     max_iter: int = 50,
     checkpoint_every: int = 8,
-    partitions: int | None = None,
     metrics=None,
     initial_state: DataFrame | None = None,
     checkpointer=None,
@@ -53,46 +67,26 @@ def connected_components(
     ``check_every``: the no-change stop test runs every k rounds (same
     driver-action economics as pagerank — min-label sweeps are idempotent
     on a converged state, so up to k-1 extra no-op rounds are the only
-    cost; exactness is unaffected). Unchecked rounds record changed=-1 in
-    metrics."""
+    cost; exactness is unaffected). A run that ``max_iter`` cuts before
+    the labels settle warns."""
     # hard cadence 8 (was 5): the every-2-round stop-test count already
     # finalizes the lazy localCheckpoints, so more frequent hard resets
     # only added parquet round-trips (order-balanced 5-vs-8 A/B: wash at
     # sf0.1, strictly fewer V-sized writes at scale; chains stay ≤ 7,
     # under the measured ~9-link planning-degradation onset)
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
-    # leaf input plan: the caller's plan stays out of every round's plan
-    sym = symmetrize(detach(edges_canon)).select("src", "dst")
-    if partitions is None:
-        try:
-            partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            partitions = spark.sparkContext.defaultParallelism
-    if partitions:
-        # static side partitioned on the gather key once — per round only
-        # the vertex-state table is exchanged (same policy as pagerank)
-        sym = sym.repartition(partitions, "src")
-    sym = sym.persist()
-    n_edges = sym.count()
-    check_every = max(1, check_every)
+    loop = Supersteps(
+        spark, max_iter, checkpoint_every, check_every, metrics, checkpointer,
+        name="connected_components",
+    )
+    # leaf input plan: the caller's plan stays out of every round's plan;
+    # static side partitioned on the gather key once — per round only the
+    # vertex-state table is exchanged (same policy as pagerank)
+    sym, n_edges = static_side(symmetrize(detach(edges_canon)).select("src", "dst"))
 
-    if initial_state is not None:
-        cols = initial_state.columns
-        label_col = "label" if "label" in cols else "component"
-        state = initial_state.select(
-            "vid", F.col(label_col).alias("label")
-        ).persist()
-    else:
-        state = (
-            sym.select(F.col("src").alias("vid"))
-            .distinct()
-            .select("vid", F.col("vid").alias("label"))
-            .persist()
-        )
-    init_state = state
+    init_state = initial_labels(sym, initial_state)
 
-    for it in range(1, max_iter + 1):
-        t0 = time.monotonic()
+    def step(state: DataFrame) -> DataFrame:
+        state = state.drop("changed")
         # 1) neighbor min
         nbr_min = (
             sym.join(state, sym.src == state.vid)
@@ -120,32 +114,19 @@ def connected_components(
                 ),
             )
         )
-        new_state = jumped.select(
+        return jumped.select(
             "vid",
             F.col("new_label").alias("label"),
             (F.col("new_label") != F.col("old")).alias("changed"),
         )
-        # per-iteration lineage truncation (plans/truncate.py: lazy
-        # localCheckpoint whose result stage the count below computes +
-        # periodic hard parquet reset — chained localCheckpoints alone
-        # still degrade exponentially in Spark 4.1)
-        new_state = truncator.truncate(new_state, it, stream="state")
-        n_changed = -1
-        if it % check_every == 0 or it == max_iter:
-            n_changed = new_state.filter("changed").count()
-        state = new_state.drop("changed")
-        if metrics is not None:
-            metrics.add(it, float(n_changed), n_edges, time.monotonic() - t0)
-        if checkpointer is not None:
-            checkpointer.maybe_save(
-                it, state.select("vid", F.col("label").alias("component")),
-                float(n_changed),
-            )
-        if n_changed == 0:
-            break
+
+    def view(state: DataFrame) -> DataFrame:
+        return state.select("vid", F.col("label").alias("component"))
+
+    state, _, _ = loop.run(init_state, step, no_label_changed, n_edges, view)
     init_state.unpersist()
     sym.unpersist()
-    return state.select("vid", F.col("label").alias("component"))
+    return view(state)
 
 
 def component_sizes(components: DataFrame) -> DataFrame:

@@ -22,18 +22,15 @@ fixed point (extra sweeps are no-ops) — which is what makes the
 fixed-round SQL oracle in ``__spark_entry__`` exact.
 
 Driver-action economics: one count per round (the stop test doubles as
-the lineage-materializing action); per-round lineage is truncated the
-same way as the PageRank/CC loops (plans/truncate.py).
+the lineage-materializing action); the rounds run on the same superstep
+loop as the PageRank/CC loops (plans/superstep.py).
 """
 
 from __future__ import annotations
 
-import time
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.superstep import NoEdgeDropped, Supersteps
 
 
 def kcore(
@@ -59,41 +56,27 @@ def kcore(
     count in the edges slot, so derived edges/s throughput is honest."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
+    loop = Supersteps(
+        spark, max_rounds, checkpoint_every, metrics=metrics,
+        name=f"kcore(k={k})", cap="max_rounds",
+    )
     active = edges_canon.select("src", "dst").persist()
     n_edges = active.count()  # one-time setup action
     first = active
-    converged = n_edges == 0
 
-    for rnd in range(1, max_rounds + 1):
-        if converged:
-            break
-        t0 = time.monotonic()
+    def step(active: DataFrame) -> DataFrame:
         ends = active.select(F.col("src").alias("vid")).unionAll(
             active.select(F.col("dst").alias("vid"))
         )
         deg = ends.groupBy("vid").agg(F.count("*").alias("core_degree"))
         keep = deg.filter(F.col("core_degree") >= k).select("vid")
-        nxt = active.join(
+        return active.join(
             keep.withColumnRenamed("vid", "src"), "src", "left_semi"
         ).join(keep.withColumnRenamed("vid", "dst"), "dst", "left_semi")
-        nxt = truncator.truncate(nxt, rnd, stream="kcore")
-        n_next = nxt.count()
-        if metrics is not None:
-            metrics.add(
-                rnd, float(n_edges - n_next), n_next, time.monotonic() - t0
-            )
-        converged = n_next == n_edges
-        n_edges = n_next
-        active = nxt
-    if not converged:
-        warnings.warn(
-            f"kcore(k={k}) stopped at max_rounds={max_rounds} before the "
-            "peel fixed point: the result is a SUPERGRAPH of the true "
-            "k-core. Raise max_rounds.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+
+    if n_edges:
+        peel = NoEdgeDropped(n_edges)
+        active, _, _ = loop.run(active, step, peel, lambda: peel.n)
 
     result = (
         active.select(F.col("src").alias("vid"))

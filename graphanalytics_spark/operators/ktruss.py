@@ -37,12 +37,9 @@ Termination is edge-count based
 
 from __future__ import annotations
 
-import time
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.superstep import NoEdgeDropped, Supersteps
 
 
 def _support(active: DataFrame) -> DataFrame:
@@ -116,42 +113,28 @@ def ktruss(
     if k < 2:
         raise ValueError("k must be >= 2 (k=2 keeps every edge)")
     need = k - 2
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
+    loop = Supersteps(
+        spark, max_rounds, checkpoint_every, metrics=metrics,
+        name=f"ktruss(k={k})", cap="max_rounds",
+    )
     # peel in (degree, id)-oriented space: bounds every round's wedge
     # fan-out by O(√m) where the former src<dst id-orientation was
     # quadratic on a mid-id mega-hub; ids are mapped back on return
     active = _orient_by_degree(edges_canon).persist()
     n_edges = active.count()
     first = active
-    converged = n_edges == 0 or need == 0
 
-    for rnd in range(1, max_rounds + 1):
-        if converged:
-            break
-        t0 = time.monotonic()
+    def step(active: DataFrame) -> DataFrame:
         sup = _support(active)
-        nxt = (
+        return (
             active.join(sup, ["src", "dst"], "left")
             .filter(F.coalesce(F.col("support"), F.lit(0)) >= need)
             .select("src", "dst")
         )
-        nxt = truncator.truncate(nxt, rnd, stream="ktruss")
-        n_next = nxt.count()
-        if metrics is not None:
-            metrics.add(
-                rnd, float(n_edges - n_next), n_next, time.monotonic() - t0
-            )
-        converged = n_next == n_edges
-        n_edges = n_next
-        active = nxt
-    if not converged:
-        warnings.warn(
-            f"ktruss(k={k}) stopped at max_rounds={max_rounds} before the "
-            "peel fixed point: the result is a SUPERGRAPH of the true "
-            "k-truss. Raise max_rounds.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+
+    if n_edges and need:
+        peel = NoEdgeDropped(n_edges)
+        active, _, _ = loop.run(active, step, peel, lambda: peel.n)
 
     sup = _support(active)
     result = active.join(sup, ["src", "dst"], "left").select(

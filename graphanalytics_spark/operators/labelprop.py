@@ -20,12 +20,12 @@ aggregation of the struct-max (max is algebraic).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.truncate import LineageTruncator, detach
+from graphanalytics_spark.operators.components import initial_labels
+from graphanalytics_spark.plans.superstep import Supersteps, no_label_changed, static_side
+from graphanalytics_spark.plans.truncate import detach
 
 
 def label_propagation(
@@ -33,49 +33,32 @@ def label_propagation(
     edges_canon: DataFrame,
     max_iter: int = 20,
     checkpoint_every: int = 8,
-    partitions: int | None = None,
     metrics=None,
     initial_state: DataFrame | None = None,
     checkpointer=None,
     check_every: int = 2,
 ) -> DataFrame:
     """Returns DataFrame(vid: long, label: long). Labels initialized to
-    vid; converges when no label changes in a sweep or max_iter reached.
-    ``initial_state``/``checkpointer`` give kill-and-resume semantics.
-    ``check_every``: the no-change stop test runs every k sweeps (sweeps
-    are idempotent on a converged labeling, so semantics are unchanged —
-    same driver-action economics as pagerank/components)."""
+    vid; converges when no label changes in a sweep or max_iter reached
+    (which warns). ``initial_state``/``checkpointer`` give kill-and-resume
+    semantics. ``check_every``: the no-change stop test runs every k sweeps
+    (sweeps are idempotent on a converged labeling, so semantics are
+    unchanged — same driver-action economics as pagerank/components)."""
     # hard cadence 8 (was 5): the every-2-sweep stop-test count already
     # finalizes the lazy localCheckpoints; order-balanced 5-vs-8 A/B had
     # 8 faster in all four pairs (3.0-3.2 vs 3.2-4.0 s warm at sf0.1)
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
-    # leaf input plan: the caller's plan stays out of every sweep's plan
-    sym = symmetrize(detach(edges_canon))
-    if partitions is None:
-        try:
-            partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            partitions = spark.sparkContext.defaultParallelism
-    if partitions:
-        # static side partitioned on the gather key once (pagerank policy)
-        sym = sym.repartition(partitions, "src")
-    sym = sym.persist()
-    n_edges = sym.count()
-    check_every = max(1, check_every)
+    loop = Supersteps(
+        spark, max_iter, checkpoint_every, check_every, metrics, checkpointer,
+        name="label_propagation",
+    )
+    # leaf input plan: the caller's plan stays out of every sweep's plan;
+    # static side partitioned on the gather key once (pagerank policy)
+    sym, n_edges = static_side(symmetrize(detach(edges_canon)))
 
-    if initial_state is not None:
-        state = initial_state.select("vid", "label").persist()
-    else:
-        state = (
-            sym.select(F.col("src").alias("vid"))
-            .distinct()
-            .select("vid", F.col("vid").alias("label"))
-            .persist()
-        )
-    init_state = state
+    init_state = initial_labels(sym, initial_state)
 
-    for it in range(1, max_iter + 1):
-        t0 = time.monotonic()
+    def step(state: DataFrame) -> DataFrame:
+        state = state.drop("changed")
         # gather: per (vertex, neighbor-label) summed weight, then argmax
         # with ties to the smaller label via max(struct(w, -label)).
         nbr = (
@@ -86,7 +69,7 @@ def label_propagation(
         best = nbr.groupBy(F.col("v").alias("vid")).agg(
             F.max(F.struct(F.col("w"), (-F.col("nlabel")).alias("neg"))).alias("m")
         ).select("vid", (-F.col("m.neg")).alias("new_label"))
-        new_state = (
+        return (
             state.join(best, "vid", "left")
             .select(
                 "vid",
@@ -94,18 +77,11 @@ def label_propagation(
                 (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
             )
         )
-        # per-iteration lineage truncation (see plans/truncate.py)
-        new_state = truncator.truncate(new_state, it, stream="state")
-        n_changed = -1
-        if it % check_every == 0 or it == max_iter:
-            n_changed = new_state.filter("changed").count()
-        state = new_state.drop("changed")
-        if metrics is not None:
-            metrics.add(it, float(n_changed), n_edges, time.monotonic() - t0)
-        if checkpointer is not None:
-            checkpointer.maybe_save(it, state, float(n_changed))
-        if n_changed == 0:
-            break
+
+    def view(state: DataFrame) -> DataFrame:
+        return state.select("vid", "label")
+
+    state, _, _ = loop.run(init_state, step, no_label_changed, n_edges, view)
     init_state.unpersist()
     sym.unpersist()
-    return state.select("vid", "label")
+    return view(state)

@@ -39,12 +39,10 @@ def _snap_number(dirname: str) -> int | None:
 
 
 def _sane_metric(metric: float | None) -> float | None:
-    """Lineage sidecars are strict JSON: non-finite metrics (inf on an
-    unchecked PageRank iteration) would serialize as the non-standard
-    ``Infinity`` token, and negative sentinels (n_changed=-1 when the
-    convergence check was batched past this iteration) are 'not measured'
-    — both are recorded as null."""
-    if metric is None or not math.isfinite(metric) or metric < 0:
+    """Lineage sidecars are strict JSON: a superstep whose stop test did
+    not run (None, plans/superstep.py) and a non-finite metric, which would
+    serialize as the non-standard ``Infinity`` token, are both null."""
+    if metric is None or not math.isfinite(metric):
         return None
     return float(metric)
 
@@ -94,7 +92,7 @@ class CheckpointManager:
             if d.startswith("iter=") and n is not None and n > iteration:
                 shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
 
-    def save(self, iteration: int, state: DataFrame, metric: float) -> str:
+    def save(self, iteration: int, state: DataFrame, metric: float | None) -> str:
         t0 = time.monotonic()
         path = self._dir(iteration)
         self._invalidate_after(iteration)
@@ -117,7 +115,7 @@ class CheckpointManager:
         _write_json_atomic(os.path.join(path, "_lineage.json"), lineage)
         return path
 
-    def maybe_save(self, iteration: int, state: DataFrame, metric: float):
+    def maybe_save(self, iteration: int, state: DataFrame, metric: float | None):
         if self.every and iteration % self.every == 0:
             return self.save(iteration, state, metric)
         return None

@@ -35,6 +35,21 @@ def test_checkpoint_lineage_written(spark, tmp_path):
         assert sum(s["rows_per_partition"].values()) == 40
 
 
+def test_unchecked_superstep_snapshot_records_no_metric(spark, tmp_path):
+    """A snapshot taken on a superstep whose stop test did not run records
+    ``metric: null`` rather than an earlier superstep's delta, and so does
+    its metrics row; checked supersteps record their own delta."""
+    sym = _graph(spark)
+    cm = CheckpointManager(spark, str(tmp_path / "ckpt_unchecked"), every=3)
+    m = pagerank.IterationMetrics()
+    pagerank.pagerank(
+        spark, sym, tol=1e-9, max_iter=4, checkpointer=cm, check_every=2, metrics=m
+    )
+    (snap,) = cm.snapshots()
+    assert snap["iteration"] == 3 and snap["metric"] is None
+    assert [r["delta"] is None for r in m.rows] == [True, False, True, False]
+
+
 def test_cc_kill_and_resume_identical(spark, tmp_path):
     from graphanalytics_spark.operators import components
 

@@ -216,6 +216,40 @@ def test_personalized_pagerank_ignores_absent_seeds(spark):
         )
 
 
+@pytest.mark.parametrize("dangling", [False, True], ids=["symmetric", "dangling"])
+def test_personalized_pagerank_with_every_seed_is_pagerank(spark, rgraph, dangling):
+    """A reset uniform over every vertex is PageRank's reset: the two runs
+    agree to 1e-12, with and without a dangling vertex (whose mass
+    re-enters through the reset in both)."""
+    ec, _, n = rgraph
+    e = graph.symmetrize(ec)
+    if dangling:
+        e = e.unionByName(spark.createDataFrame([(0, n, 1.0)], "src long, dst long, weight double"))
+    seeds = e.select(F.col("src").alias("vid")).union(e.select("dst")).distinct()
+    pr = {r.vid: r["rank"] for r in pagerank.pagerank(spark, e, tol=1e-10).collect()}
+    ppr = {
+        r.vid: r["rank"]
+        for r in pagerank.personalized_pagerank(spark, e, seeds, tol=1e-10).collect()
+    }
+    assert sorted(pr) == sorted(ppr) == list(range(n + int(dangling)))
+    assert np.allclose([pr[v] for v in sorted(pr)], [ppr[v] for v in sorted(pr)], rtol=0, atol=1e-12)
+
+
+def test_components_warns_when_max_iter_cuts_the_labels(spark):
+    """A cap that cuts the run warns; a converged run and a fixed-iteration
+    PageRank (tol=0, which never runs a stop test) do not."""
+    import warnings as _w
+
+    path = graph.canonicalize(fixtures.edges_df(spark, [(i, i + 1) for i in range(63)]))
+    with pytest.warns(RuntimeWarning, match="max_iter"):
+        components.connected_components(spark, path, max_iter=2).count()
+    with _w.catch_warnings():
+        _w.simplefilter("error", RuntimeWarning)
+        got = {r.component for r in components.connected_components(spark, path).collect()}
+        pagerank.pagerank(spark, graph.symmetrize(path), tol=0.0, max_iter=2).count()
+    assert got == {0}
+
+
 def test_nhop_pairs_reachability_and_min_hops(spark):
     """Pair-list n-hop matching (the reference nHop kernel's query shape):
     path 0-1-2-3-4 plus island (10,11)."""
@@ -326,26 +360,41 @@ def test_detached_input_survives_source_unpersist(spark, rgraph):
 
 
 @pytest.mark.parametrize(
-    "call",
+    "call,knob",
     [
-        lambda spark, ec: pagerank.pagerank(spark, graph.symmetrize(ec), checkpoint_every=0),
-        lambda spark, ec: components.connected_components(spark, ec, checkpoint_every=0),
-        lambda spark, ec: labelprop.label_propagation(spark, ec, checkpoint_every=-1),
-        lambda spark, ec: sssp.sssp(spark, ec, 0, checkpoint_every=0),
-        lambda spark, ec: hits.hits(spark, ec, checkpoint_every=0),
-        lambda spark, ec: hyperball.neighborhood_function(spark, ec, checkpoint_every=0),
-        lambda spark, ec: hyperball.hyperball_per_vertex(spark, ec, checkpoint_every=0),
+        (lambda spark, ec: pagerank.pagerank(spark, graph.symmetrize(ec), checkpoint_every=0), "checkpoint_every"),
+        (lambda spark, ec: components.connected_components(spark, ec, checkpoint_every=0), "checkpoint_every"),
+        (lambda spark, ec: labelprop.label_propagation(spark, ec, checkpoint_every=-1), "checkpoint_every"),
+        (lambda spark, ec: sssp.sssp(spark, ec, 0, checkpoint_every=0), "checkpoint_every"),
+        (lambda spark, ec: hits.hits(spark, ec, checkpoint_every=0), "checkpoint_every"),
+        (lambda spark, ec: hyperball.neighborhood_function(spark, ec, checkpoint_every=0), "checkpoint_every"),
+        (lambda spark, ec: hyperball.hyperball_per_vertex(spark, ec, checkpoint_every=0), "checkpoint_every"),
+        (lambda spark, ec: pagerank.pagerank(spark, graph.symmetrize(ec), check_every=0), "check_every"),
+        (lambda spark, ec: pagerank.pagerank_csr(spark, graph.symmetrize(ec), check_every=-2), "check_every"),
+        (
+            lambda spark, ec: pagerank.personalized_pagerank(
+                spark, graph.symmetrize(ec), ec.select("src"), check_every=0
+            ),
+            "check_every",
+        ),
+        (lambda spark, ec: components.connected_components(spark, ec, check_every=0), "check_every"),
+        (lambda spark, ec: labelprop.label_propagation(spark, ec, check_every=-1), "check_every"),
     ],
-    ids=["pagerank", "components", "labelprop", "sssp", "hits", "neighborhood", "per_vertex"],
+    ids=[
+        "pagerank", "components", "labelprop", "sssp", "hits", "neighborhood", "per_vertex",
+        "pagerank_check_every", "pagerank_csr_check_every", "personalized_check_every",
+        "components_check_every", "labelprop_check_every",
+    ],
 )
-def test_checkpoint_every_below_one_is_rejected(spark, rgraph, call):
-    """A cadence below 1 is an error, not a silent fallback to some other
-    cadence than the documented default; it is raised before any job runs,
-    so no static side is persisted and left behind."""
+def test_checkpoint_every_below_one_is_rejected(spark, rgraph, call, knob):
+    """A cadence below 1 (the hard-reset ``checkpoint_every`` or the
+    stop-test ``check_every``) is an error, not a silent fallback to some
+    other cadence; it is raised before any job runs, so no static side is
+    persisted and left behind."""
     sc = spark.sparkContext
     sc.setJobGroup("cadence_check", "invalid checkpoint_every")
     try:
-        with pytest.raises(ValueError, match="checkpoint_every"):
+        with pytest.raises(ValueError, match=knob):
             call(spark, rgraph[0])
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
