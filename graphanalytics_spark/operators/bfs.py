@@ -8,10 +8,11 @@ partitioner ``xai_save_partition_bfs``
 range partitioning + AQE covers semantics); this module supplies the
 capability Spark-first:
 
-- ``bfs_levels``: multi-source frontier BFS (hop distance), the same
-  semi-join frontier loop as ``operators/nhop.py`` but with one global
-  frontier instead of per-seed tracking — O(diameter) joins, frontier
-  usually ≪ V so Catalyst broadcasts it against the persisted adjacency.
+- ``bfs_levels`` / ``bfs_levels_tagged`` (and ``nhop.n_hop``): multi-source
+  frontier BFS (hop distance) on one frontier loop keyed by ``["vid"]``
+  (nearest seed) or ``["seed", "vid"]`` (per seed) — O(diameter) joins,
+  frontier usually ≪ V so Catalyst broadcasts it against the persisted
+  adjacency.
 - ``bfs_partition``: assign each vertex a partition id by chunking the
   deterministic BFS visit order (level, then vid) into ``n_parts`` equal
   ranges. Seeds default to the minimum vid of every connected component,
@@ -24,8 +25,8 @@ capability Spark-first:
   certificate row assert exactly that.
 
 Scale: each BFS round is one frontier⋈edges semi-join + anti-join against
-the visited set (both shuffle on vid); the visited set is carried as a
-persisted union of per-level slices exactly like ``n_hop``. At 10^12
+the visited set (both shuffle on the keys); the visited set is carried as
+a union of eagerly checkpointed per-level slices. At 10^12
 vertices the partitioner would be run per-component on the contracted
 (post-Louvain) graph, not the raw one — same as the reference, which
 BFS-orders *partitions*, not raw vertices.
@@ -36,6 +37,50 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import dense_ids, symmetrize
+
+
+def _adjacency(edges_canon: DataFrame, directed: bool) -> DataFrame:
+    return (
+        edges_canon.select("src", "dst")
+        if directed
+        else symmetrize(edges_canon).select("src", "dst")
+    ).persist()
+
+
+def _levels(
+    adj: DataFrame, start: DataFrame, keys: list[str], max_depth: int | None
+) -> DataFrame:
+    """The frontier loop from level 0 ``start`` (*keys, level), ``keys``
+    ending in ``vid``, over the persisted ``adj`` (unpersisted on return):
+    every level as (*keys, level), each key once."""
+    tags = keys[:-1]
+    # every per-level slice is EAGERLY localCheckpointed: an unbounded
+    # frontier loop re-joins its own output against the same adjacency
+    # every round, and without a hard lineage cut the analyzer re-resolves
+    # a plan that doubles per level (measured: round walls 1 s → 19 s →
+    # 104 s by depth 7 on a 7k-edge graph with persist()-only slices).
+    # After the cut each round's plan is constant-size; the checkpointed
+    # blocks are reclaimed by the ContextCleaner when the frames go out
+    # of scope — the same discipline as operators/triangles.py (r3).
+    frontier = start.localCheckpoint(eager=True)
+    visited = frontier
+    depth = 0
+    while max_depth is None or depth < max_depth:
+        depth += 1
+        nxt = (
+            frontier.join(adj, frontier.vid == adj.src)
+            .select(*tags, F.col("dst").alias("vid"))
+            .distinct()
+            .join(visited.select(*keys), keys, "left_anti")
+            .withColumn("level", F.lit(depth))
+            .localCheckpoint(eager=True)
+        )
+        if nxt.isEmpty():
+            break
+        visited = visited.union(nxt)
+        frontier = nxt
+    adj.unpersist()
+    return visited
 
 
 def bfs_levels(
@@ -49,46 +94,15 @@ def bfs_levels(
     level 0 at the seeds; vertices unreachable from every seed are absent.
     ``seeds`` is any DataFrame whose first column is a vertex id; default
     = the single minimum vid in the graph."""
-    adj = (
-        edges_canon.select("src", "dst")
-        if directed
-        else symmetrize(edges_canon).select("src", "dst")
-    ).persist()
-
+    adj = _adjacency(edges_canon, directed)
     if seeds is None:
         seeds = adj.agg(F.min("src").alias("vid"))
-    # every per-level slice is EAGERLY localCheckpointed: an unbounded
-    # frontier loop re-joins its own output against the same adjacency
-    # every round, and without a hard lineage cut the analyzer re-resolves
-    # a plan that doubles per level (measured: round walls 1 s → 19 s →
-    # 104 s by depth 7 on a 7k-edge graph with persist()-only slices).
-    # After the cut each round's plan is constant-size; the checkpointed
-    # blocks are reclaimed by the ContextCleaner when the frames go out
-    # of scope — the same discipline as operators/triangles.py (r3).
-    frontier = (
+    start = (
         seeds.select(F.col(seeds.columns[0]).alias("vid"))
         .distinct()
         .withColumn("level", F.lit(0))
-        .localCheckpoint(eager=True)
     )
-    visited = frontier
-    depth = 0
-    while max_depth is None or depth < max_depth:
-        depth += 1
-        nxt = (
-            frontier.join(adj, frontier.vid == adj.src)
-            .select(F.col("dst").alias("vid"))
-            .distinct()
-            .join(visited.select("vid"), "vid", "left_anti")
-            .withColumn("level", F.lit(depth))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.count() == 0:
-            break
-        visited = visited.union(nxt)
-        frontier = nxt
-    adj.unpersist()
-    return visited
+    return _levels(adj, start, ["vid"], max_depth)
 
 
 def bfs_levels_tagged(
@@ -99,43 +113,21 @@ def bfs_levels_tagged(
     directed: bool = False,
 ) -> DataFrame:
     """Per-seed hop distance in ONE frontier loop: DataFrame(seed, vid,
-    level) with level 0 at (s, s). Where ``bfs_levels`` merges all seeds
-    into one frontier (distance to the NEAREST seed), this keeps the
-    frontier keyed by (seed, vid) so every pivot's full distance vector
-    comes out of a single O(max-eccentricity) round loop instead of
-    |seeds| separate loops — the scale path for pivot-sampled estimators
+    level) with level 0 at (s, s), each distinct seed once. Where
+    ``bfs_levels`` merges all seeds into one frontier (distance to the
+    NEAREST seed), this keeps the frontier keyed by (seed, vid) so every
+    pivot's full distance vector comes out of a single
+    O(max-eccentricity) round loop instead of |seeds| separate loops —
+    the scale path for pivot-sampled estimators
     (harmonic/closeness/distance-distribution over dozens of pivots).
     Per-round cost is Σ_s |frontier_s| join rows; rounds stop when every
     seed's frontier is exhausted."""
-    adj = (
-        edges_canon.select("src", "dst")
-        if directed
-        else symmetrize(edges_canon).select("src", "dst")
-    ).persist()
-    frontier = (
+    start = (
         seeds.select(F.col(seeds.columns[0]).alias("seed"))
         .distinct()
         .select("seed", F.col("seed").alias("vid"), F.lit(0).alias("level"))
-        .localCheckpoint(eager=True)
     )
-    visited = frontier
-    depth = 0
-    while max_depth is None or depth < max_depth:
-        depth += 1
-        nxt = (
-            frontier.join(adj, frontier.vid == adj.src)
-            .select("seed", F.col("dst").alias("vid"))
-            .distinct()
-            .join(visited.select("seed", "vid"), ["seed", "vid"], "left_anti")
-            .withColumn("level", F.lit(depth))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.count() == 0:
-            break
-        visited = visited.union(nxt)
-        frontier = nxt
-    adj.unpersist()
-    return visited
+    return _levels(_adjacency(edges_canon, directed), start, ["seed", "vid"], max_depth)
 
 
 def component_seeds(spark: SparkSession, edges_canon: DataFrame) -> DataFrame:

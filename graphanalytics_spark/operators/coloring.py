@@ -20,12 +20,17 @@ neighbors are never colored in the same round — the result is a proper
 coloring by construction, and deterministic for a given seed (replayable
 across task retries). Expected O(log n) rounds (Luby argument).
 
+The rounds run on the shared superstep loop (plans/superstep.py) over
+one state table (vid, prio, color), color NULL while uncolored; the stop
+test counts those, and a run ``max_rounds`` cuts warns.
+
 Scale shape per round: one self-join of the uncolored frontier
 candidates against uncolored-neighbor priorities (the MIS winner test),
-one join against colored neighbors, and the mex as
+one join against colored neighbors, the mex as
 ``explode(sequence(0, blocked_count))`` anti-joined to the blocked color
 set — a vertex with b colored neighbors scans at most b+1 candidates,
-so total mex work over the whole run is O(E) rows. No per-row Python.
+so total mex work over the whole run is O(E) rows — and one merge of
+the new colors into the state. No per-row Python.
 
 Grundy invariant (what the tests/certificate assert): for every vertex
 and every color c < color(v), some neighbor carries c — i.e. the
@@ -34,12 +39,10 @@ coloring is first-fit-tight, hence ≤ max_degree+1 colors.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.superstep import Supersteps, count_where
 
 
 def greedy_coloring(
@@ -52,20 +55,24 @@ def greedy_coloring(
     """Proper distance-1 coloring: DataFrame(vid: long, color: int ≥ 0).
     Deterministic for a given seed. Colors are first-fit (Grundy) w.r.t.
     the Jones–Plassmann elimination order."""
-    sym = symmetrize(edges_canon).select("src", "dst").persist()
-    verts = sym.select(F.col("src").alias("vid")).distinct()
-    prio = verts.select(
-        "vid",
-        F.pmod(F.xxhash64("vid", F.lit(seed)), F.lit(1 << 40)).alias("prio"),
+    loop = Supersteps(
+        spark, max_rounds, checkpoint_every, name="greedy_coloring", cap="max_rounds"
     )
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
+    sym = symmetrize(edges_canon).select("src", "dst").persist()
+    init_state = (
+        sym.select(F.col("src").alias("vid"))
+        .distinct()
+        .select(
+            "vid",
+            F.pmod(F.xxhash64("vid", F.lit(seed)), F.lit(1 << 40)).alias("prio"),
+            F.lit(None).cast("int").alias("color"),
+        )
+        .persist()
+    )
 
-    uncolored = prio.localCheckpoint(eager=True)
-    colored = spark.createDataFrame([], "vid long, color int")
-    n_left = uncolored.count()
-    rounds = 0
-    while n_left > 0 and rounds < max_rounds:
-        rounds += 1
+    def step(state: DataFrame) -> DataFrame:
+        uncolored = state.filter(F.col("color").isNull()).select("vid", "prio")
+        colored = state.filter(F.col("color").isNotNull()).select("vid", "color")
         # winner test: no UNCOLORED neighbor with (higher prio, tie higher
         # vid) — a deterministic local max, mirroring mis.py
         nbr_p = (
@@ -130,26 +137,16 @@ def greedy_coloring(
                 "left_anti",
             )
             .groupBy("vid")
-            .agg(F.min("c").cast("int").alias("color"))
+            .agg(F.min("c").cast("int").alias("new_color"))
         )
-        newly = truncator.truncate(newly, rounds, stream=None)
-        colored = truncator.truncate(
-            colored.unionByName(newly), rounds, stream="colored"
+        return state.join(newly, "vid", "left").select(
+            "vid", "prio", F.coalesce("color", "new_color").alias("color")
         )
-        uncolored = (
-            uncolored.join(newly.select("vid"), "vid", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        n_left = uncolored.count()
-    if n_left > 0:
-        warnings.warn(
-            f"greedy_coloring stopped at max_rounds={max_rounds} with "
-            f"{n_left} vertices uncolored.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+
+    state, _, _ = loop.run(init_state, step, count_where("color IS NULL"), 0)
+    init_state.unpersist()
     sym.unpersist()
-    return colored
+    return state.filter(F.col("color").isNotNull()).select("vid", "color")
 
 
 def verify_coloring(

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.superstep import Supersteps, no_label_changed, static_side
+from graphanalytics_spark.plans.superstep import Supersteps, count_where, static_side
 from graphanalytics_spark.plans.truncate import detach
 
 
@@ -123,7 +123,7 @@ def connected_components(
     def view(state: DataFrame) -> DataFrame:
         return state.select("vid", F.col("label").alias("component"))
 
-    state, _, _ = loop.run(init_state, step, no_label_changed, n_edges, view)
+    state, _, _ = loop.run(init_state, step, count_where("changed"), n_edges, view)
     init_state.unpersist()
     sym.unpersist()
     return view(state)

@@ -20,16 +20,106 @@ Deterministic: datasketches HLL has no RNG — the same input set always
 yields the same estimate, which is what lets an invariant certificate
 gate the result (the converged N(∞) must match the EXACT per-component
 pair count Σ|C|² from ``connected_components``).
+
+Both public functions are thin wrappers over one sweep, ``_sweep``, run on
+the shared superstep loop (plans/superstep.py) over the per-vertex state
+(vid, sk, est, harmonic, sum_dist); it stops after two flat rounds of
+Σ est and warns when ``max_t`` cuts it first.
 """
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.superstep import IterationMetrics, Supersteps, Unchanged
+
+
+def _sweep(
+    spark: SparkSession,
+    edges_canon: DataFrame,
+    max_t: int,
+    lg_k: int,
+    checkpoint_every: int,
+    name: str,
+) -> tuple[DataFrame, list[dict]]:
+    """Run HyperBall to two flat rounds of Σ est (or ``max_t``): the final
+    state (vid, sk, est, harmonic, sum_dist) and the curve from t=0,
+    without the round that confirmed convergence."""
+    metrics = IterationMetrics()
+    loop = Supersteps(
+        spark, max_t, checkpoint_every, metrics=metrics, name=name, cap="max_t"
+    )
+    sym = symmetrize(edges_canon).select("src", "dst").persist()
+    n_edges = sym.count()
+
+    # round 0 goes through the truncator's hard reset, as every fourth
+    # round does: a union's estimate depends on the order its sketches
+    # merge in, so the start state's partitioning is part of the result
+    # (a persisted start state moved N(4) by one on the sf0.01 graph)
+    init_state = loop.truncator.truncate(
+        sym.select(F.col("src").alias("vid"))
+        .distinct()
+        .groupBy("vid")
+        .agg(F.hll_sketch_agg("vid", F.lit(lg_k)).alias("sk"))
+        .select(
+            "vid",
+            "sk",
+            F.hll_sketch_estimate("sk").alias("est"),
+            F.lit(0.0).alias("harmonic"),
+            F.lit(0.0).alias("sum_dist"),
+        ),
+        0,
+        stream="state",
+    )
+
+    def total(st: DataFrame) -> float:
+        return float(st.agg(F.sum("est").alias("n")).first()["n"])
+
+    rounds = iter(range(1, max_t + 1))
+
+    def step(state: DataFrame) -> DataFrame:
+        t = F.lit(float(next(rounds)))
+        nbr = (
+            sym.join(state, sym.src == state.vid)
+            .groupBy(F.col("dst").alias("vid"))
+            .agg(F.hll_union_agg("sk").alias("nsk"))
+        )
+        sk = F.when(F.col("nsk").isNull(), F.col("sk")).otherwise(F.hll_union("sk", "nsk"))
+        merged = (
+            state.join(nbr, "vid", "left")
+            .select("vid", sk.alias("sk"), F.col("est").alias("prev_est"), "harmonic", "sum_dist")
+            .withColumn("est", F.hll_sketch_estimate("sk"))
+        )
+        gain = F.greatest(F.col("est") - F.col("prev_est"), F.lit(0.0))
+        return merged.select(
+            "vid",
+            "sk",
+            "est",
+            (F.col("harmonic") + gain / t).alias("harmonic"),
+            (F.col("sum_dist") + gain * t).alias("sum_dist"),
+        )
+
+    # Two consecutive flat rounds before stopping (r4 advice): in the
+    # sparse/linear-counting regime a register update can leave the
+    # estimate unchanged for one round while sketches are still growing,
+    # so a single flat total is not proof of the fixed point. Balls grow
+    # every round until they equal their component, so one extra sweep
+    # after true convergence is a no-op, and two flat totals in a row can
+    # only happen at the fixed point or at an estimate plateau the
+    # single-round break would also have accepted.
+    flat = Unchanged(total, total(init_state), r=2)
+    state, _, converged = loop.run(init_state, step, flat, n_edges)
+    sym.unpersist()
+    curve = [{"t": 0, "n_pairs_est": flat.values[0], "wall_s": 0.0}] + [
+        {"t": row["iteration"], "n_pairs_est": n, "wall_s": row["wall_s"]}
+        for row, n in zip(metrics.rows, flat.values[1:])
+    ]
+    if converged:
+        # drop the confirming round so effective_diameter reads the curve
+        # up to the first flat round
+        curve.pop()
+    return state, curve
 
 
 def neighborhood_function(
@@ -43,65 +133,9 @@ def neighborhood_function(
     curve as [{"t": t, "n_pairs_est": float, "wall_s": s}, ...] with t=0
     counting the |V| self-pairs. The curve is driver-side tiny (one float
     per round) — the per-vertex sketch table never leaves the cluster."""
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
-    sym = symmetrize(edges_canon).select("src", "dst").persist()
-    sym.count()
-
-    state = (
-        sym.select(F.col("src").alias("vid"))
-        .distinct()
-        .groupBy("vid")
-        .agg(F.hll_sketch_agg("vid", F.lit(lg_k)).alias("sk"))
-    )
-    state = truncator.truncate(state, 0, stream="hb")
-
-    def total(st: DataFrame) -> float:
-        return float(
-            st.agg(
-                F.sum(F.hll_sketch_estimate("sk")).alias("n")
-            ).first()["n"]
-        )
-
-    curve = [{"t": 0, "n_pairs_est": total(state), "wall_s": 0.0}]
-    flat_rounds = 0
-    for t in range(1, max_t + 1):
-        t0 = time.monotonic()
-        nbr = (
-            sym.join(state, sym.src == state.vid)
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.hll_union_agg("sk").alias("nsk"))
-        )
-        new_state = state.join(nbr, "vid", "left").select(
-            "vid",
-            F.when(
-                F.col("nsk").isNull(), F.col("sk")
-            ).otherwise(F.hll_union("sk", "nsk")).alias("sk"),
-        )
-        new_state = truncator.truncate(new_state, t, stream="hb")
-        n = total(new_state)
-        state = new_state
-        curve.append(
-            {"t": t, "n_pairs_est": n, "wall_s": time.monotonic() - t0}
-        )
-        # Two consecutive flat rounds before stopping (r4 advice): in the
-        # sparse/linear-counting regime a register update can leave the
-        # estimate unchanged for one round while sketches are still
-        # growing, so a single flat total is not proof of the fixed point.
-        # Balls grow every round until they equal their component, so one
-        # extra sweep after true convergence is a no-op, and two flat
-        # totals in a row can only happen at the fixed point or at an
-        # estimate plateau the single-round break would also have accepted.
-        if n == curve[-2]["n_pairs_est"]:
-            flat_rounds += 1
-            if flat_rounds >= 2:
-                # drop the duplicate confirmation round from the curve so
-                # effective_diameter reads the same curve as before
-                curve.pop()
-                break
-        else:
-            flat_rounds = 0
-    sym.unpersist()
-    return curve
+    return _sweep(
+        spark, edges_canon, max_t, lg_k, checkpoint_every, "neighborhood_function"
+    )[1]
 
 
 def hyperball_per_vertex(
@@ -127,78 +161,9 @@ def hyperball_per_vertex(
     sum_dist 0). In HLL sparse mode (small components) the estimates are
     exact — gated by the brute-force equality test; at scale accuracy is
     the lg_k knob exactly as for the neighborhood function."""
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
-    sym = symmetrize(edges_canon).select("src", "dst").persist()
-    sym.count()
-
-    state = (
-        sym.select(F.col("src").alias("vid"))
-        .distinct()
-        .groupBy("vid")
-        .agg(F.hll_sketch_agg("vid", F.lit(lg_k)).alias("sk"))
-        .select(
-            "vid",
-            "sk",
-            F.hll_sketch_estimate("sk").alias("est"),
-            F.lit(0.0).alias("harmonic"),
-            F.lit(0.0).alias("sum_dist"),
-        )
+    state, _ = _sweep(
+        spark, edges_canon, max_t, lg_k, checkpoint_every, "hyperball_per_vertex"
     )
-    state = truncator.truncate(state, 0, stream="hbv")
-
-    def total(st: DataFrame) -> float:
-        return float(st.agg(F.sum("est").alias("n")).first()["n"])
-
-    prev_total = total(state)
-    flat_rounds = 0
-    for t in range(1, max_t + 1):
-        nbr = (
-            sym.join(state, sym.src == state.vid)
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.hll_union_agg("sk").alias("nsk"))
-        )
-        merged = state.join(nbr, "vid", "left").select(
-            "vid",
-            F.when(F.col("nsk").isNull(), F.col("sk"))
-            .otherwise(F.hll_union("sk", "nsk"))
-            .alias("sk"),
-            F.col("est").alias("prev_est"),
-            "harmonic",
-            "sum_dist",
-        )
-        new_state = merged.select(
-            "vid",
-            "sk",
-            F.hll_sketch_estimate("sk").alias("est"),
-            "prev_est",
-            "harmonic",
-            "sum_dist",
-        ).select(
-            "vid",
-            "sk",
-            "est",
-            (
-                F.col("harmonic")
-                + F.greatest(F.col("est") - F.col("prev_est"), F.lit(0.0))
-                / F.lit(float(t))
-            ).alias("harmonic"),
-            (
-                F.col("sum_dist")
-                + F.greatest(F.col("est") - F.col("prev_est"), F.lit(0.0))
-                * F.lit(float(t))
-            ).alias("sum_dist"),
-        )
-        new_state = truncator.truncate(new_state, t, stream="hbv")
-        n = total(new_state)
-        state = new_state
-        if n == prev_total:
-            flat_rounds += 1
-            if flat_rounds >= 2:
-                break
-        else:
-            flat_rounds = 0
-        prev_total = n
-    sym.unpersist()
     return state.select(
         "vid",
         (F.col("est") - 1.0).alias("n_reachable"),

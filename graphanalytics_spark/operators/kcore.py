@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from graphanalytics_spark.plans.superstep import NoEdgeDropped, Supersteps
+from graphanalytics_spark.plans.superstep import Supersteps, Unchanged
 
 
 def kcore(
@@ -75,8 +75,8 @@ def kcore(
         ).join(keep.withColumnRenamed("vid", "dst"), "dst", "left_semi")
 
     if n_edges:
-        peel = NoEdgeDropped(n_edges)
-        active, _, _ = loop.run(active, step, peel, lambda: peel.n)
+        peel = Unchanged(DataFrame.count, n_edges)
+        active, _, _ = loop.run(active, step, peel, lambda: peel.values[-1])
 
     result = (
         active.select(F.col("src").alias("vid"))

@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from graphanalytics_spark.plans.superstep import NoEdgeDropped, Supersteps
+from graphanalytics_spark.plans.superstep import Supersteps, Unchanged
 
 
 def _support(active: DataFrame) -> DataFrame:
@@ -133,8 +133,8 @@ def ktruss(
         )
 
     if n_edges and need:
-        peel = NoEdgeDropped(n_edges)
-        active, _, _ = loop.run(active, step, peel, lambda: peel.n)
+        peel = Unchanged(DataFrame.count, n_edges)
+        active, _, _ = loop.run(active, step, peel, lambda: peel.values[-1])
 
     sup = _support(active)
     result = active.join(sup, ["src", "dst"], "left").select(

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
 from graphanalytics_spark.operators.components import initial_labels
-from graphanalytics_spark.plans.superstep import Supersteps, no_label_changed, static_side
+from graphanalytics_spark.plans.superstep import Supersteps, count_where, static_side
 from graphanalytics_spark.plans.truncate import detach
 
 
@@ -81,7 +81,7 @@ def label_propagation(
     def view(state: DataFrame) -> DataFrame:
         return state.select("vid", "label")
 
-    state, _, _ = loop.run(init_state, step, no_label_changed, n_edges, view)
+    state, _, _ = loop.run(init_state, step, count_where("changed"), n_edges, view)
     init_state.unpersist()
     sym.unpersist()
     return view(state)

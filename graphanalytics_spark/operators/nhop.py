@@ -4,7 +4,10 @@ The reference's nHop kernel batches (src,dst) pairs through hash-probe
 adjacency expansion (/root/reference/L2/nHop/kernel/nHop_kernel.cpp:78);
 the NebulaGraph tutorial surface is ``GO n STEPS`` / ``GET SUBGRAPH``
 (/root/reference/nebula-get_started.ipynb). In Spark both are the same
-semi-join frontier loop: frontier ⋈ edges on src, n times.
+semi-join frontier loop: frontier ⋈ edges on src, n times. ``n_hop`` is
+the per-seed BFS of ``operators/bfs.py`` (``bfs_levels_tagged``) cut at
+``hops`` levels, with ``level`` named ``hop``; this module adds the
+pair-list and induced-subgraph queries on top of it.
 
 Scale: the frontier is usually far smaller than the graph, so Catalyst
 broadcasts it against the persisted edge table; dedup per hop keeps the
@@ -15,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from graphanalytics_spark.graph import symmetrize
+from graphanalytics_spark.operators.bfs import bfs_levels_tagged
 
 
 def n_hop(
@@ -29,44 +32,11 @@ def n_hop(
 
     seeds: DataFrame with a vertex-id first column. Returns
     DataFrame(seed: long, vid: long, hop: int) — hop = shortest hop count
-    (0 for the seed itself).
+    (0 for the seed itself), each (seed, vid) once.
     """
-    adj = (
-        edges_canon.select("src", "dst")
-        if directed
-        else symmetrize(edges_canon).select("src", "dst")
-    ).persist()
-
-    frontier = seeds.select(
-        F.col(seeds.columns[0]).alias("seed"),
-        F.col(seeds.columns[0]).alias("vid"),
-        F.lit(0).alias("hop"),
-    ).persist()
-    generations = [frontier]  # persisted per-hop slices; reached = union
-    reached = frontier
-
-    for h in range(1, hops + 1):
-        expanded = (
-            frontier.join(adj, frontier.vid == adj.src)
-            .select("seed", F.col("dst").alias("vid"), F.lit(h).alias("hop"))
-            .distinct()
-        )
-        new_frontier = expanded.join(
-            reached.select("seed", "vid"), ["seed", "vid"], "left_anti"
-        ).persist()
-        if new_frontier.isEmpty():
-            new_frontier.unpersist()
-            break
-        generations.append(new_frontier)
-        reached = reached.union(new_frontier)  # union of cached slices
-        frontier = new_frontier
-    # detach the result from the cached generations, then free them all —
-    # no cache creep proportional to `hops` outlives the call
-    out = reached.localCheckpoint(eager=True)
-    for g in generations:
-        g.unpersist()
-    adj.unpersist()
-    return out
+    return bfs_levels_tagged(
+        spark, edges_canon, seeds, max_depth=hops, directed=directed
+    ).withColumnRenamed("level", "hop")
 
 
 def n_hop_pairs(

@@ -228,7 +228,12 @@ def _pagerank(
             return F.lit(base) + F.lit(damping) * (gathered + dm)
 
     else:
-        init = _seeded(verts, seeds)
+        try:
+            init = _seeded(verts, seeds)
+        except ValueError:
+            verts.unpersist()
+            links.unpersist()
+            raise
 
         def share(mass):
             return mass

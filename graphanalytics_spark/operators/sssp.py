@@ -9,32 +9,32 @@ kernel carries the same frontier-expansion shape without weights
 
 Algorithm: synchronous frontier relaxation (the distributed Bellman–Ford
 specialization that behaves like delta-stepping when edge weights are
-similar): round i relaxes ONLY edges leaving vertices whose tentative
-distance improved in round i−1 —
+similar) on the shared superstep loop (plans/superstep.py). The state is
+(vid, dist, changed), ``changed`` marking the vertices whose tentative
+distance improved in the previous round; they are the frontier, and
+round i relaxes ONLY the edges leaving them —
 
-    cand_i  = frontier_{i-1} ⋈ adjacency → (dst, dist + w)
+    cand_i  = state.filter(changed) ⋈ adjacency → (dst, dist + w)
     best_i  = min per dst (map-side combine)
-    improved = best_i < state.dist (or state missing)
-    state   = min-merge; frontier_i = improved
+    state   = min-merge; changed = best_i < state.dist (or state missing)
 
 Rounds ≤ the hop count of the longest shortest path (≤ V−1 always, in
 practice O(diameter)); each round is one equi-join + one hash
 aggregation + one merge join, only the frontier and the V-sized state
-table move. The improved-count is the round's single driver action and
-the loop's stop test; lineage is truncated per round. Negative weights
-are rejected up front (Bellman–Ford would need V−1 full-edge rounds and
-a negative-cycle check — out of scope for link-graph lengths, which are
-counts or reciprocal affinities).
+table move. The changed-count is the round's single driver action and
+the loop's stop test; the loop truncates lineage per round and warns
+when ``max_rounds`` cuts the relaxation (distances are then upper
+bounds). Negative weights are rejected up front (Bellman–Ford would
+need V−1 full-edge rounds and a negative-cycle check — out of scope for
+link-graph lengths, which are counts or reciprocal affinities).
 """
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.superstep import Supersteps, count_where
 
 
 def sssp(
@@ -48,7 +48,9 @@ def sssp(
     """Shortest weighted distance from ``source``: DataFrame(vid, dist)
     over reachable vertices (dist(source) = 0). Undirected by default
     (edges symmetrized); weights must be non-negative."""
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every)
+    loop = Supersteps(
+        spark, max_rounds, checkpoint_every, name="sssp", cap="max_rounds"
+    )
     adj = (
         edges.select("src", "dst", "weight")
         if directed
@@ -58,13 +60,8 @@ def sssp(
         adj.unpersist()
         raise ValueError("sssp requires non-negative edge weights")
 
-    state = spark.createDataFrame(
-        [(int(source), 0.0)], "vid long, dist double"
-    ).localCheckpoint(eager=True)
-    frontier = state
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
+    def step(state: DataFrame) -> DataFrame:
+        frontier = state.filter("changed")
         cand = (
             frontier.join(adj, frontier.vid == adj.src)
             .select(
@@ -74,35 +71,20 @@ def sssp(
             .groupBy("vid")
             .agg(F.min("nd").alias("nd"))
         )
-        merged = state.join(cand, "vid", "full_outer").select(
+        return state.select("vid", "dist").join(cand, "vid", "full_outer").select(
             "vid",
             F.least(
                 F.coalesce(F.col("dist"), F.lit(float("inf"))),
                 F.coalesce(F.col("nd"), F.lit(float("inf"))),
             ).alias("dist"),
-            (
-                F.col("dist").isNull() | (F.col("nd") < F.col("dist"))
-            ).alias("_improved"),
+            F.coalesce(
+                F.col("dist").isNull() | (F.col("nd") < F.col("dist")), F.lit(False)
+            ).alias("changed"),
         )
-        merged = truncator.truncate(merged, rounds, stream="sssp")
-        improved = merged.filter(
-            F.coalesce(F.col("_improved"), F.lit(False))
-        ).select("vid", "dist")
-        n_improved = improved.count()
-        state = merged.select("vid", "dist")
-        if n_improved == 0:
-            break
-        frontier = improved
-    else:
-        # the loop exhausted max_rounds with relaxations still improving:
-        # distances are an overestimate (same loud-truncation contract as
-        # kcore/ktruss — r5 ADVICE #1)
-        warnings.warn(
-            f"sssp stopped at max_rounds={max_rounds} before the relaxation "
-            "fixed point: returned distances are UPPER BOUNDS, not exact "
-            "shortest distances. Raise max_rounds.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+
+    source_state = spark.createDataFrame(
+        [(int(source), 0.0, True)], "vid long, dist double, changed boolean"
+    )
+    state, _, _ = loop.run(source_state, step, count_where("changed"), 0)
     adj.unpersist()
-    return state
+    return state.select("vid", "dist")

@@ -5,7 +5,8 @@ truncated new state; ``Supersteps`` owns the lineage truncation, the
 stop-test cadence, the metrics rows, the checkpointer hook and the
 warning when the cap cuts a run. The loop sets no Spark job group;
 whoever profiles the run owns those. ``static_side`` builds the
-operator's static join side.
+operator's static join side; ``count_where`` and ``Unchanged`` are the
+shared stop tests.
 """
 
 from __future__ import annotations
@@ -72,25 +73,31 @@ def static_side(
     return out, out.count()
 
 
-def no_label_changed(state: DataFrame) -> tuple[float, bool]:
-    """Stop test of a labeling whose step flags every vertex whose label
-    moved in a ``changed`` column: (vertices changed, none changed)."""
-    n_changed = state.filter("changed").count()
-    return float(n_changed), n_changed == 0
+def count_where(predicate: str) -> Callable[[DataFrame], tuple[float, bool]]:
+    """Stop test of a step that flags the vertices still in play, e.g.
+    ``"changed"`` (CC, LPA, SSSP) or ``"color IS NULL"`` (coloring):
+    (rows matching ``predicate``, none match)."""
+
+    def stop(state: DataFrame) -> tuple[float, bool]:
+        n = state.filter(predicate).count()
+        return float(n), n == 0
+
+    return stop
 
 
-class NoEdgeDropped:
-    """Stop test of a peel over a shrinking edge set: (edges dropped,
-    none dropped). ``n`` is the surviving edge count, the edges of the
-    round's metrics row."""
+class Unchanged:
+    """Stop test on a scalar ``measure`` of the state: (its change since
+    the last check, unchanged for ``r`` consecutive checks). ``values``
+    holds every measure, ``first`` included."""
 
-    def __init__(self, n_edges: int):
-        self.n = n_edges
+    def __init__(self, measure: Callable[[DataFrame], float], first: float, r: int = 1):
+        self.measure, self.r, self.flat, self.values = measure, r, 0, [first]
 
-    def __call__(self, edges: DataFrame) -> tuple[float, bool]:
-        n_next = edges.count()
-        dropped, self.n = self.n - n_next, n_next
-        return float(dropped), dropped == 0
+    def __call__(self, state: DataFrame) -> tuple[float, bool]:
+        self.values.append(self.measure(state))
+        delta = abs(self.values[-1] - self.values[-2])
+        self.flat = self.flat + 1 if delta == 0 else 0
+        return float(delta), self.flat >= self.r
 
 
 @dataclass

@@ -7,6 +7,7 @@ import pytest
 
 from graphanalytics_spark import fixtures, graph
 from graphanalytics_spark.operators import (
+    coloring,
     components,
     contraction,
     hits,
@@ -162,6 +163,10 @@ def test_nhop_bfs_levels(spark):
     seeds = spark.createDataFrame([(0,)], "v long")
     got = sorted((r.vid, r.hop) for r in nhop.n_hop(spark, ec, seeds, 2).collect())
     assert got == [(0, 0), (1, 1), (2, 1), (3, 2)]
+    # a repeated seed id still yields each (seed, vid) once
+    twice = spark.createDataFrame([(0,), (0,)], "v long")
+    got = sorted(tuple(r) for r in nhop.n_hop(spark, ec, twice, 2).collect())
+    assert got == [(0, 0, 0), (0, 1, 1), (0, 2, 1), (0, 3, 2)]
 
 
 def test_khop_subgraph_induced_semantics(spark):
@@ -200,7 +205,8 @@ def test_personalized_pagerank_mass_and_locality(spark):
 def test_personalized_pagerank_ignores_absent_seeds(spark):
     """Seeds not present in the graph must not scale ranks down: Σ rank
     stays 1 (normalization counts only in-graph seeds); an all-absent seed
-    set raises."""
+    set raises, and the links and vertex set it persisted first do not
+    outlive the call."""
     import pytest as _pytest
 
     edges = [(i, i + 1) for i in range(9)]
@@ -210,10 +216,13 @@ def test_personalized_pagerank_ignores_absent_seeds(spark):
     r = {row.vid: row.rank for row in
          pagerank.personalized_pagerank(spark, sym, seeds, tol=1e-10, max_iter=50).collect()}
     assert abs(sum(r.values()) - 1.0) < 1e-6
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     with _pytest.raises(ValueError):
         pagerank.personalized_pagerank(
             spark, sym, spark.createDataFrame([(999,)], "seed long")
         )
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
 
 
 @pytest.mark.parametrize("dangling", [False, True], ids=["symmetric", "dangling"])
@@ -248,6 +257,29 @@ def test_components_warns_when_max_iter_cuts_the_labels(spark):
         got = {r.component for r in components.connected_components(spark, path).collect()}
         pagerank.pagerank(spark, graph.symmetrize(path), tol=0.0, max_iter=2).count()
     assert got == {0}
+
+
+@pytest.mark.parametrize(
+    "run,cap",
+    [
+        (lambda spark, ec, cut: hyperball.neighborhood_function(spark, ec, max_t=1 if cut else 32), "max_t"),
+        (lambda spark, ec, cut: hyperball.hyperball_per_vertex(spark, ec, max_t=1 if cut else 32).count(), "max_t"),
+        (lambda spark, ec, cut: coloring.greedy_coloring(spark, ec, max_rounds=1 if cut else 200).count(), "max_rounds"),
+    ],
+    ids=["neighborhood", "per_vertex", "coloring"],
+)
+def test_cap_warns_when_it_cuts_the_run(spark, run, cap):
+    """A cap that cuts the 64-vertex path's run warns, naming the cap; a
+    run that converges under the default cap does not."""
+    import warnings as _w
+
+    path = graph.canonicalize(fixtures.edges_df(spark, [(i, i + 1) for i in range(63)]))
+    with pytest.warns(RuntimeWarning, match=cap):
+        run(spark, path, True)
+    bridge = graph.canonicalize(fixtures.edges_df(spark, fixtures.TWO_TRIANGLES_BRIDGE))
+    with _w.catch_warnings():
+        _w.simplefilter("error", RuntimeWarning)
+        run(spark, bridge, False)
 
 
 def test_nhop_pairs_reachability_and_min_hops(spark):
@@ -369,6 +401,7 @@ def test_detached_input_survives_source_unpersist(spark, rgraph):
         (lambda spark, ec: hits.hits(spark, ec, checkpoint_every=0), "checkpoint_every"),
         (lambda spark, ec: hyperball.neighborhood_function(spark, ec, checkpoint_every=0), "checkpoint_every"),
         (lambda spark, ec: hyperball.hyperball_per_vertex(spark, ec, checkpoint_every=0), "checkpoint_every"),
+        (lambda spark, ec: coloring.greedy_coloring(spark, ec, checkpoint_every=0), "checkpoint_every"),
         (lambda spark, ec: pagerank.pagerank(spark, graph.symmetrize(ec), check_every=0), "check_every"),
         (lambda spark, ec: pagerank.pagerank_csr(spark, graph.symmetrize(ec), check_every=-2), "check_every"),
         (
@@ -381,7 +414,7 @@ def test_detached_input_survives_source_unpersist(spark, rgraph):
         (lambda spark, ec: labelprop.label_propagation(spark, ec, check_every=-1), "check_every"),
     ],
     ids=[
-        "pagerank", "components", "labelprop", "sssp", "hits", "neighborhood", "per_vertex",
+        "pagerank", "components", "labelprop", "sssp", "hits", "neighborhood", "per_vertex", "coloring",
         "pagerank_check_every", "pagerank_csr_check_every", "personalized_check_every",
         "components_check_every", "labelprop_check_every",
     ],
