@@ -24,9 +24,9 @@ The rounds run on the shared superstep loop (plans/superstep.py) over
 one state table (vid, prio, color), color NULL while uncolored; the stop
 test counts those, and a run ``max_rounds`` cuts warns.
 
-Scale shape per round: one self-join of the uncolored frontier
-candidates against uncolored-neighbor priorities (the MIS winner test),
-one join against colored neighbors, the mex as
+Scale shape per round: the MIS selection step (operators/mis.py
+``local_minima``) over the uncolored vertices keyed by their negated
+priority, one join against colored neighbors, the mex as
 ``explode(sequence(0, blocked_count))`` anti-joined to the blocked color
 set — a vertex with b colored neighbors scans at most b+1 candidates,
 so total mex work over the whole run is O(E) rows — and one merge of
@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
+from graphanalytics_spark.operators.mis import local_minima
 from graphanalytics_spark.plans.superstep import Supersteps, count_where
 
 
@@ -71,42 +72,14 @@ def greedy_coloring(
     )
 
     def step(state: DataFrame) -> DataFrame:
-        uncolored = state.filter(F.col("color").isNull()).select("vid", "prio")
         colored = state.filter(F.col("color").isNotNull()).select("vid", "color")
         # winner test: no UNCOLORED neighbor with (higher prio, tie higher
-        # vid) — a deterministic local max, mirroring mis.py
-        nbr_p = (
-            sym.join(uncolored.select(F.col("vid").alias("src")), "src", "left_semi")
-            .join(
-                uncolored.select(
-                    F.col("vid").alias("dst"),
-                    F.col("prio").alias("nprio"),
-                    F.col("vid").alias("nvid"),
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("nprio").alias("p"), F.col("nvid").alias("v")
-                    )
-                ).alias("best_n")
-            )
+        # vid) — the local max of (prio, vid) is the local min of its
+        # negation
+        uncolored = state.filter(F.col("color").isNull()).select(
+            "vid", F.struct(-F.col("prio"), -F.col("vid")).alias("key")
         )
-        frontier = (
-            uncolored.join(nbr_p, uncolored.vid == nbr_p.src, "left")
-            .filter(
-                F.col("best_n").isNull()
-                | (
-                    F.struct(
-                        F.col("prio").alias("p"), F.col("vid").alias("v")
-                    )
-                    > F.col("best_n")
-                )
-            )
-            .select("vid")
-        )
+        frontier = local_minima(sym, uncolored).select("vid")
         # mex over already-colored neighbors: explode 0..b candidates,
         # anti-join the blocked set, take the min
         blocked = (

@@ -16,10 +16,13 @@ gather shape: adjacency ⋈ state, group by dst with a sketch-union
 aggregate (map-side partial union absorbs hub skew), then a scalar
 ``hll_union`` with the previous sketch. State is V rows × 2^lg_k bytes
 (lg_k=12 → 4 KB/vertex, the precision/size knob at 10^12 vertices).
-Deterministic: datasketches HLL has no RNG — the same input set always
-yields the same estimate, which is what lets an invariant certificate
-gate the result (the converged N(∞) must match the EXACT per-component
-pair count Σ|C|² from ``connected_components``).
+Deterministic for a fixed partitioning: datasketches HLL has no RNG,
+but a union's estimate depends on the order its sketches merge in, so
+the estimates can move with the core count, ``spark.sql.shuffle.partitions``
+or how the state is materialized (a persisted start state instead of
+the parquet round 0 moved N(4) by one on the sf0.01 graph). The
+converged N(∞) is what an invariant certificate gates: it must match the
+EXACT per-component pair count Σ|C|² from ``connected_components``.
 
 Both public functions are thin wrappers over one sweep, ``_sweep``, run on
 the shared superstep loop (plans/superstep.py) over the per-vertex state

@@ -13,9 +13,16 @@ Phase loop (one 'level'):
          gain(v→c) = w_{v,c} − wdeg_v · tot_c∖v / (2m)
      compared against staying; ties → smaller community id. Moves are
      synchronous; to avoid the classic two-vertex swap oscillation
-     (the reference serializes conflicts with graph coloring,
-     coloringDistanceOne.cpp:52 — unnecessary in Spark) only the
-     deterministic hash-half of vertices may move each round.
+     (the reference serializes conflicts with distance-1 coloring,
+     coloringDistanceOne.cpp:52) a vertex that wants to move does so only
+     when its per-round hash priority beats every neighbor that also
+     wants to move — the MIS selection step (operators/mis.py
+     ``local_minima``). The rounds run on the shared superstep loop
+     (plans/superstep.py) and stop at the first round in which no vertex
+     moves: the vertex with the smallest priority among those that want
+     to move always moves, so a quiet round means none wanted to, and
+     the next round would see the same state. A phase that
+     ``max_rounds_per_phase`` cuts warns.
   2. Contract: communities become vertices, parallel edges sum,
      self-loops carry intra-community weight (buildNextLevelGraphOpt).
   3. Compose the original→community mapping (PhaseLoop_UpdatingC_org,
@@ -40,7 +47,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
 from graphanalytics_spark.operators.contraction import contract_graph
+from graphanalytics_spark.operators.mis import local_minima
 from graphanalytics_spark.operators.modularity import modularity
+from graphanalytics_spark.plans.superstep import Supersteps, count_where
 from graphanalytics_spark.plans.truncate import LineageTruncator
 
 
@@ -49,10 +58,19 @@ def _one_phase(
     edges_canon: DataFrame,
     max_rounds: int,
     seed: int,
-    truncator: LineageTruncator | None = None,
 ) -> tuple[DataFrame, int]:
     """One Louvain level over the given graph (self-loops allowed in
     ``edges_canon``). Returns (labels(vid,label), rounds_used)."""
+    # hard parquet reset every 8 rounds (was 2, then 4): the desire-set
+    # checkpoint below keeps the per-round lazy chains short, so frequent
+    # hard resets only add parquet round-trips (measured ~1.3 s/round at
+    # hard_every=4 vs ~1.5-1.7 s at 2; an order-balanced 4-vs-8 A/B on the
+    # bench ring then had 8 faster in every pair, medians 29.8 → 28.9 s,
+    # identical best_q). Chains stay ≤ 7 lazy localCheckpoints — the
+    # pagerank cadence sweep showed degradation starts near chain length
+    # ~9 and is severe by ~19, so 8 keeps headroom; at cluster scale fewer
+    # V-sized parquet round-trips is also strictly less I/O.
+    loop = Supersteps(spark, max_rounds, 8, name="louvain", cap="max_rounds_per_phase")
     sym = symmetrize(edges_canon.filter(F.col("src") != F.col("dst"))).persist()
     self_w = edges_canon.filter(F.col("src") == F.col("dst")).select(
         F.col("src").alias("vid"), F.col("weight").alias("self_w")
@@ -79,15 +97,12 @@ def _one_phase(
         deg.unpersist()
         return out, 0
 
-    truncator = truncator or LineageTruncator(spark, hard_every=8)
-    state = truncator.truncate(
-        deg.select("vid", F.col("vid").alias("label"), "wdeg"), 0
+    state = loop.truncator.truncate(
+        deg.select("vid", F.col("vid").alias("label"), "wdeg"), 0, stream="state"
     )
+    rounds = iter(range(1, max_rounds + 1))
 
-    rounds = 0
-    quiet = 0
-    for rnd in range(1, max_rounds + 1):
-        rounds = rnd
+    def step(state: DataFrame) -> DataFrame:
         # neighbor-community incident weights w_{v,c}, with a zero-weight
         # row for every vertex's CURRENT community unioned in before the
         # aggregation. That one union makes the stay baseline a plain
@@ -151,6 +166,7 @@ def _one_phase(
         # measured 2.1-2.5 s/round recomputed vs 1.5-1.7 s materialized on
         # the phase-1 bench ring (guide §3.3 duplicated subtrees; blocks
         # reclaimed by the ContextCleaner).
+        pr = F.xxhash64("vid", F.lit(seed + next(rounds)))
         desire = (
             summary.filter(
                 (F.col("m.gain") > F.col("stay_gain"))
@@ -159,7 +175,7 @@ def _one_phase(
             .select(
                 "vid",
                 (-F.col("m.negc")).alias("best_c"),
-                F.xxhash64("vid", F.lit(seed + rnd)).alias("pr"),
+                F.struct(pr.alias("pr"), "vid").alias("key"),
             )
             .localCheckpoint(eager=True)
         )
@@ -169,43 +185,20 @@ def _one_phase(
         # (coloringDistanceOne.cpp:52): no simultaneous adjacent moves, so
         # the classic two-vertex swap oscillation cannot occur and each
         # move's gain was evaluated with its neighborhood held fixed.
-        d_l = desire.select(F.col("vid").alias("v"), F.col("pr").alias("pv"))
-        d_r = desire.select(F.col("vid").alias("u"), F.col("pr").alias("pu"))
-        nbr_min = (
-            sym.join(d_l, sym.src == d_l.v)
-            .join(d_r, sym.dst == d_r.u)
-            .groupBy("v", "pv")
-            .agg(F.min(F.struct("pu", "u")).alias("bn"))
-        )
-        blocked = nbr_min.filter(
-            (F.col("bn.pu") < F.col("pv"))
-            | ((F.col("bn.pu") == F.col("pv")) & (F.col("bn.u") < F.col("v")))
-        ).select(F.col("v").alias("vid"))
-        movers = desire.join(blocked, "vid", "left_anti").select(
+        movers = local_minima(sym, desire).select(
             "vid", F.col("best_c").alias("new_label")
         )
-        new_state = (
-            state.join(movers, "vid", "left")
-            .select(
-                "vid",
-                F.coalesce("new_label", "label").alias("label"),
-                "wdeg",
-                (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
-            )
+        return state.join(movers, "vid", "left").select(
+            "vid",
+            F.coalesce("new_label", "label").alias("label"),
+            "wdeg",
+            (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
         )
-        # NOTE: no GC stream here — the phase's final state escapes via
-        # `labels` into the mapping/contract chain, which can stay lazy
-        # until after the NEXT phase's rounds; deleting superseded
-        # snapshots could break that un-materialized lineage
-        new_state = truncator.truncate(new_state, rnd)
-        n_moved = new_state.filter("changed").count()
-        state = new_state.drop("changed")
-        quiet = quiet + 1 if n_moved == 0 else 0
-        if quiet >= 2:
-            break
+
+    state, rounds_used, _ = loop.run(state, step, count_where("changed"), 0)
     sym.unpersist()
     deg.unpersist()
-    return state.select("vid", "label"), rounds
+    return state.select("vid", "label"), rounds_used
 
 
 def louvain(
@@ -261,16 +254,8 @@ def louvain(
         )
         return compose_through(v2c, comm, "community")
 
-    # hard parquet reset every 8 truncations (was 2, then 4): the
-    # desire-set checkpoint above keeps the per-round lazy chains short,
-    # so frequent hard resets only add parquet round-trips (measured
-    # ~1.3 s/round at hard_every=4 vs ~1.5-1.7 s at 2; an order-balanced
-    # 4-vs-8 A/B on the bench ring then had 8 faster in every pair,
-    # medians 29.8 → 28.9 s, identical best_q). Chains stay ≤ 7 lazy
-    # localCheckpoints — the pagerank cadence sweep showed degradation
-    # starts near chain length ~9 and is severe by ~19, so 8 keeps
-    # headroom; at cluster scale fewer V-sized parquet round-trips is
-    # also strictly less I/O.
+    # the phase-level graph and mapping: two tables, not one state, so no
+    # snapshot stream (best_mapping may still read a superseded mapping)
     truncator = LineageTruncator(spark, hard_every=8)
     g = edges_canon
     mapping = None  # original vid -> current community id space of g
@@ -293,9 +278,7 @@ def louvain(
 
     for phase in range(start_phase, max_phases + 1):
         t0 = time.monotonic()
-        labels, rounds = _one_phase(
-            spark, g, max_rounds_per_phase, seed + 1000 * phase, truncator
-        )
+        labels, rounds = _one_phase(spark, g, max_rounds_per_phase, seed + 1000 * phase)
         # compose mapping: C_orig[v] = C[C_orig[v]]
         # (PhaseLoop_UpdatingC_org, louvainMultiPhaseRun.cpp:54-68).
         # mapping.community lives in g's vertex-id space, which is exactly

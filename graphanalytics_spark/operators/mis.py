@@ -12,9 +12,13 @@ We use the same degree bias with a deterministic hash in place of the RNG —
 ``xxhash64(vid, seed)`` — so runs are replayable; ties break on vid, making
 the priority a total order (required for a deterministic result).
 
-The per-round core is a join + anti-condition aggregation
-(min-priority-neighbor vs own priority) — semi/anti join shapes that AQE
-plans; no coloring or locking is needed because rounds are synchronous.
+One round is one ``local_minima`` selection (a join + min-neighbor-key
+aggregation + anti join — semi/anti join shapes that AQE plans; no
+coloring or locking is needed because rounds are synchronous) and one
+merge of the decided vertices into the state. The rounds run on the
+shared superstep loop (plans/superstep.py) over one state table
+(vid, prio, in_set), in_set NULL while the vertex is active; the stop
+test counts those, and a run ``max_iter`` cuts warns.
 """
 
 from __future__ import annotations
@@ -22,7 +26,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.superstep import Supersteps, count_where
+
+
+def local_minima(sym: DataFrame, cand: DataFrame) -> DataFrame:
+    """The rows of ``cand`` (vid, key, …) whose ``key`` is below the key
+    of every ``sym`` neighbor that is also in ``cand`` — a vertex with no
+    such neighbor included. Keys must be distinct, so no two neighbors
+    are both selected: the result is an independent set of ``cand``.
+
+    The one Luby selection step of MIS (a round's winners), coloring (its
+    frontier, with the key negated for a local maximum) and louvain (its
+    conflict-free movers)."""
+    own = cand.select(F.col("vid").alias("src"), F.col("key").alias("own"))
+    nbr = cand.select(F.col("vid").alias("dst"), F.col("key").alias("nkey"))
+    beaten = (
+        sym.join(own, "src")
+        .join(nbr, "dst")
+        .groupBy("src", "own")
+        .agg(F.min("nkey").alias("best"))
+        .filter(F.col("best") < F.col("own"))
+        .select(F.col("src").alias("vid"))
+    )
+    return cand.join(beaten, "vid", "left_anti")
 
 
 def maximal_independent_set(
@@ -32,7 +58,10 @@ def maximal_independent_set(
     max_iter: int = 100,
 ) -> DataFrame:
     """Returns DataFrame(vid: long) — a maximal independent set of the
-    undirected graph. Deterministic for a given seed."""
+    undirected graph. Deterministic for a given seed. Warns when
+    ``max_iter`` rounds leave vertices undecided; the set returned is then
+    independent but not maximal."""
+    loop = Supersteps(spark, max_iter, 4, name="maximal_independent_set")
     sym = symmetrize(edges_canon).select("src", "dst").persist()
     deg = sym.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("deg"))
     avg_deg = deg.agg(F.avg("deg")).first()[0]
@@ -40,8 +69,8 @@ def maximal_independent_set(
         sym.unpersist()
         return spark.createDataFrame([], "vid long")
     # degree-biased deterministic priority; lower = stronger claim.
-    # struct(prio, vid) is a total order.
-    active = deg.select(
+    # in_set is NULL while the vertex is still active
+    init_state = deg.select(
         "vid",
         (
             F.pmod(F.xxhash64("vid", F.lit(seed)), F.lit(1 << 20)).cast("double")
@@ -49,67 +78,36 @@ def maximal_independent_set(
             * (F.col("deg") + F.lit(float(avg_deg)))
             / F.lit(float(avg_deg))
         ).alias("prio"),
+        F.lit(None).cast("boolean").alias("in_set"),
     ).persist()
 
-    truncator = LineageTruncator(spark, hard_every=4)
-    selected_parts = []
-    for it in range(1, max_iter + 1):
-        # a vertex wins if no active neighbor has (smaller prio, tie smaller vid)
-        lhs = active.select(
-            F.col("vid").alias("v"), F.col("prio").alias("p")
-        )
-        rhs = active.select(
-            F.col("vid").alias("u"), F.col("prio").alias("q")
-        )
-        nbr = (
-            sym.join(lhs, sym.src == lhs.v)
-            .join(rhs, sym.dst == rhs.u)
-            .groupBy("v", "p")
-            .agg(F.min(F.struct("q", "u")).alias("best_nbr"))
-        )
-        winners = nbr.filter(
-            (F.col("p") < F.col("best_nbr.q"))
-            | ((F.col("p") == F.col("best_nbr.q")) & (F.col("v") < F.col("best_nbr.u")))
-        ).select(F.col("v").alias("vid"))
-        # isolated-in-subgraph actives (no active neighbor) also win
-        isolated = active.join(
-            sym.join(active.select(F.col("vid").alias("u")), sym.dst == F.col("u"))
-            .select(F.col("src").alias("vid")),
-            "vid",
-            "left_anti",
+    def step(state: DataFrame) -> DataFrame:
+        # a vertex wins if no active neighbor has (smaller prio, tie
+        # smaller vid); winners join the set, their neighbors leave it
+        active = state.filter(F.col("in_set").isNull())
+        won = local_minima(
+            sym, active.select("vid", F.struct("prio", "vid").alias("key"))
         ).select("vid")
-        # eager localCheckpoint each round: MIS rounds stack two joins per
-        # round on the state lineage — without truncation the plan depth is
-        # quadratic in rounds and analysis time dominates (O(log n) rounds,
-        # so checkpoint cost is bounded).
-        round_sel = truncator.truncate(winners.union(isolated).distinct(), it)
-        n_sel = round_sel.count()
-        if n_sel == 0:
-            break
-        selected_parts.append(round_sel)
-        # deactivate winners and their neighbors
-        nbrs_of_sel = (
-            sym.join(round_sel, sym.src == round_sel.vid).select(
-                F.col("dst").alias("vid")
-            )
+        lost = sym.join(won.withColumnRenamed("vid", "src"), "src", "left_semi").select(
+            F.col("dst").alias("vid"), F.lit(False).alias("won")
         )
-        dead = round_sel.select("vid").union(nbrs_of_sel).distinct()
-        new_active = truncator.truncate(
-            active.join(dead, "vid", "left_anti"), it, stream="active"
+        # one aggregation on vid both dedups the losers and leaves decided
+        # partitioned for the state join (a distinct of the losers before
+        # the union ran 71 jobs per call on the sf0.01 graph, this 63)
+        decided = (
+            won.withColumn("won", F.lit(True))
+            .unionByName(lost)
+            .groupBy("vid")
+            .agg(F.max("won").alias("won"))
         )
-        # no per-round count of the surviving set (one driver action per
-        # round saved — guide §1.2): an emptied active set just makes the
-        # next round's winner count 0, which breaks the loop; the lazy
-        # truncation finalizes with that round's first action
-        active.unpersist()
-        active = new_active
+        return state.join(decided, "vid", "left").select(
+            "vid", "prio", F.coalesce("in_set", "won").alias("in_set")
+        )
+
+    state, _, _ = loop.run(init_state, step, count_where("in_set IS NULL"), 0)
+    init_state.unpersist()
     sym.unpersist()
-    if not selected_parts:
-        return spark.createDataFrame([], "vid long")
-    result = selected_parts[0]
-    for p in selected_parts[1:]:
-        result = result.union(p)
-    return result.distinct()
+    return state.filter("in_set").select("vid")
 
 
 def verify_mis(spark: SparkSession, edges_canon: DataFrame, mis: DataFrame) -> dict:

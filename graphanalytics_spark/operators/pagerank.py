@@ -68,9 +68,13 @@ def _fractions(e: DataFrame) -> DataFrame:
     partitioning (no exchange) and the edges⋈wdeg join is co-partitioned
     (no exchange), so building the links exchanges the edges once (guide
     §2.4: two operations keyed the same way share one exchange). frac is
-    an exact integer ratio for count-weighted graphs."""
+    an exact integer ratio for count-weighted graphs.
+
+    The join is pinned to a shuffled hash join building on the aggregated
+    side: left to AQE, a small graph's join broadcast whichever side's
+    stage finished first, so the cached links' plan differed run to run."""
     out = e.groupBy("src").agg(F.sum("weight").alias("wdeg"))
-    return e.join(out, "src").select(
+    return e.join(out.hint("shuffle_hash"), "src").select(
         "src", "dst", (F.col("weight") / F.col("wdeg")).alias("frac")
     )
 

@@ -75,7 +75,7 @@ def static_side(
 
 def count_where(predicate: str) -> Callable[[DataFrame], tuple[float, bool]]:
     """Stop test of a step that flags the vertices still in play, e.g.
-    ``"changed"`` (CC, LPA, SSSP) or ``"color IS NULL"`` (coloring):
+    ``"changed"`` (CC, LPA, SSSP, louvain) or ``"in_set IS NULL"`` (MIS):
     (rows matching ``predicate``, none match)."""
 
     def stop(state: DataFrame) -> tuple[float, bool]:

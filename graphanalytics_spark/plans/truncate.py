@@ -30,12 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class LineageTruncator:
-    def __init__(
-        self,
-        spark: SparkSession,
-        hard_every: int = 4,
-        base_dir: str | None = None,
-    ):
+    def __init__(self, spark: SparkSession, hard_every: int = 4):
         if hard_every < 1:
             raise ValueError(
                 "checkpoint_every (the hard-reset cadence) must be >= 1 "
@@ -43,7 +38,6 @@ class LineageTruncator:
             )
         self.spark = spark
         self.hard_every = hard_every
-        self._own_dir = base_dir is None
         # hard resets are transient per-run state (durable snapshots are
         # CheckpointManager's job), so prefer tmpfs when the host has one
         # WITH headroom (session.tmpfs_dir_if_roomy gate — same free-space
@@ -58,11 +52,8 @@ class LineageTruncator:
         tmp_root = os.environ.get("SPARK_GRAFT_TRUNC_DIR") or tmpfs_dir_if_roomy()
         if tmp_root:
             os.makedirs(tmp_root, exist_ok=True)
-        self.base_dir = base_dir or tempfile.mkdtemp(
-            prefix="ga_trunc_", dir=tmp_root
-        )
-        if self._own_dir:
-            atexit.register(self.cleanup)
+        self.base_dir = tempfile.mkdtemp(prefix="ga_trunc_", dir=tmp_root)
+        atexit.register(self.cleanup)
         self._count = 0
         self._last_path: dict[str, str] = {}
 
@@ -83,7 +74,7 @@ class LineageTruncator:
 
         ``stream`` opts into snapshot garbage collection: when a hard
         snapshot of the same stream lands, the previous one is DELETED —
-        essential now that the default base_dir is tmpfs, where a long run
+        essential now that base_dir defaults to tmpfs, where a long run
         would otherwise accumulate every superseded vertex-state copy in
         RAM. Only pass a stream when each snapshot fully supersedes the
         previous one (an iterative state loop); leave it None for tables

@@ -13,6 +13,7 @@ from graphanalytics_spark.operators import (
     hits,
     hyperball,
     labelprop,
+    louvain,
     mis,
     modularity,
     nhop,
@@ -131,6 +132,27 @@ def test_mis_deterministic(spark, rgraph):
     a = sorted(r.vid for r in mis.maximal_independent_set(spark, ec, seed=1).collect())
     b = sorted(r.vid for r in mis.maximal_independent_set(spark, ec, seed=1).collect())
     assert a == b
+
+
+def test_local_minima_matches_python(spark, rgraph):
+    """The shared Luby selection step: a candidate is kept iff its hashed
+    key is below that of every neighbor that is also a candidate."""
+    ec, edges, n = rgraph
+    sym = graph.symmetrize(ec).select("src", "dst")
+    cand = spark.range(n).filter(F.col("id") % 3 != 0).select(
+        F.col("id").alias("vid"), F.xxhash64("id", F.lit(3)).alias("key")
+    )
+    key = {r.vid: r.key for r in cand.collect()}
+    assert len(set(key.values())) == len(key)
+    nbrs = {v: set() for v in key}
+    for a, b, _ in edges:
+        if a in key and b in key:
+            nbrs[a].add(b)
+            nbrs[b].add(a)
+    want = {v for v in key if all(key[v] < key[u] for u in nbrs[v])}
+    got = [r.vid for r in mis.local_minima(sym, cand).collect()]
+    assert len(got) == len(set(got)) and set(got) == want
+    assert 0 < len(want) < len(key)
 
 
 def test_modularity_known_value(spark):
@@ -265,8 +287,13 @@ def test_components_warns_when_max_iter_cuts_the_labels(spark):
         (lambda spark, ec, cut: hyperball.neighborhood_function(spark, ec, max_t=1 if cut else 32), "max_t"),
         (lambda spark, ec, cut: hyperball.hyperball_per_vertex(spark, ec, max_t=1 if cut else 32).count(), "max_t"),
         (lambda spark, ec, cut: coloring.greedy_coloring(spark, ec, max_rounds=1 if cut else 200).count(), "max_rounds"),
+        (lambda spark, ec, cut: mis.maximal_independent_set(spark, ec, max_iter=1 if cut else 100).count(), "max_iter"),
+        (
+            lambda spark, ec, cut: louvain.louvain(spark, ec, max_rounds_per_phase=1 if cut else 20).count(),
+            "max_rounds_per_phase",
+        ),
     ],
-    ids=["neighborhood", "per_vertex", "coloring"],
+    ids=["neighborhood", "per_vertex", "coloring", "mis", "louvain"],
 )
 def test_cap_warns_when_it_cuts_the_run(spark, run, cap):
     """A cap that cuts the 64-vertex path's run warns, naming the cap; a

@@ -377,3 +377,31 @@ def test_static_side_plans_as_leaf_scan(spark, monkeypatch, operator):
         leaves = [n.getClass().getSimpleName() for n in _walk(cached) if not _kids(n)]
         assert 1 <= len(leaves) <= 2, cached.toString()
         assert set(leaves) == {"RDDScanExec"}, cached.toString()
+
+
+def test_pagerank_links_build_on_the_aggregated_side(spark, monkeypatch):
+    """The links' cached plan joins the edges to their out-degree sums
+    with a shuffled hash join that builds on the sums, on a graph small
+    enough that AQE would otherwise broadcast one side — which side
+    depended on stage-finish order, so the cached plan was not
+    reproducible."""
+    from graphanalytics_spark.operators import pagerank
+
+    sym = graph.symmetrize(_symmetric_graph(spark))
+    plan = _superstep_plan(
+        monkeypatch, lambda: pagerank.pagerank(spark, sym, tol=0.0, max_iter=4).count()
+    )
+    links = [
+        n
+        for n in _walk(plan)
+        if n.getClass().getSimpleName() == "InMemoryTableScanExec"
+        and "frac#" in n.output().toString()
+    ]
+    assert links, plan.toString()
+    cached = links[0].relation().cachedPlan()
+    names = [n.getClass().getSimpleName() for n in _walk(cached)]
+    assert "BroadcastExchangeExec" not in names, cached.toString()
+    joins = [n for n in _walk(cached) if n.getClass().getSimpleName() == "ShuffledHashJoinExec"]
+    assert len(joins) == 1, cached.toString()
+    build = joins[0].right() if joins[0].buildSide().toString() == "BuildRight" else joins[0].left()
+    assert "wdeg#" in build.output().toString(), cached.toString()
