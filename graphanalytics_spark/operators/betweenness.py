@@ -48,12 +48,12 @@ def betweenness(
     betweenness is rounded to 9 decimals (cross-engine discipline)."""
     from graphanalytics_spark.operators.bfs import bfs_levels_tagged
 
+    if seeds is not None and not seeds:
+        raise ValueError("betweenness needs a non-empty pivot set")
     sym = symmetrize(edges_canon).select("src", "dst").persist()
     if seeds is None:
         seed_df = sym.select(F.col("src").alias("vid")).distinct()
     else:
-        if not seeds:
-            raise ValueError("betweenness needs a non-empty pivot set")
         seed_df = spark.createDataFrame([(int(s),) for s in seeds], "vid long")
 
     lv = bfs_levels_tagged(spark, edges_canon, seed_df, max_depth=max_depth)
@@ -145,6 +145,5 @@ def betweenness(
         .agg(F.round(F.sum("delta"), 9).alias("betweenness"))
     )
     res = out.localCheckpoint(eager=True)
-    res.count()
     sym.unpersist()
     return res

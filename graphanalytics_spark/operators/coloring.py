@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from graphanalytics_spark.graph import symmetrize
 from graphanalytics_spark.operators.mis import local_minima
 from graphanalytics_spark.plans.superstep import Supersteps, count_where
+from graphanalytics_spark.plans.truncate import detach
 
 
 def greedy_coloring(
@@ -56,70 +57,67 @@ def greedy_coloring(
     """Proper distance-1 coloring: DataFrame(vid: long, color: int ≥ 0).
     Deterministic for a given seed. Colors are first-fit (Grundy) w.r.t.
     the Jones–Plassmann elimination order."""
-    loop = Supersteps(
+    with Supersteps(
         spark, max_rounds, checkpoint_every, name="greedy_coloring", cap="max_rounds"
-    )
-    sym = symmetrize(edges_canon).select("src", "dst").persist()
-    init_state = (
-        sym.select(F.col("src").alias("vid"))
-        .distinct()
-        .select(
-            "vid",
-            F.pmod(F.xxhash64("vid", F.lit(seed)), F.lit(1 << 40)).alias("prio"),
-            F.lit(None).cast("int").alias("color"),
-        )
-        .persist()
-    )
-
-    def step(state: DataFrame) -> DataFrame:
-        colored = state.filter(F.col("color").isNotNull()).select("vid", "color")
-        # winner test: no UNCOLORED neighbor with (higher prio, tie higher
-        # vid) — the local max of (prio, vid) is the local min of its
-        # negation
-        uncolored = state.filter(F.col("color").isNull()).select(
-            "vid", F.struct(-F.col("prio"), -F.col("vid")).alias("key")
-        )
-        frontier = local_minima(sym, uncolored).select("vid")
-        # mex over already-colored neighbors: explode 0..b candidates,
-        # anti-join the blocked set, take the min
-        blocked = (
-            frontier.join(sym, frontier.vid == sym.src)
-            .join(
-                colored.select(
-                    F.col("vid").alias("dst"), F.col("color").alias("ncolor")
-                ),
-                "dst",
-            )
-            .select(F.col("src").alias("vid"), "ncolor")
+    ) as loop:
+        sym = loop.static(symmetrize(detach(edges_canon)).select("src", "dst"))
+        init_state = loop.cache(
+            sym.select(F.col("src").alias("vid"))
             .distinct()
-        )
-        nblocked = blocked.groupBy("vid").agg(F.count("*").alias("b"))
-        cand = (
-            frontier.join(nblocked, "vid", "left")
             .select(
                 "vid",
-                F.explode(
-                    F.sequence(F.lit(0), F.coalesce(F.col("b"), F.lit(0)))
-                ).alias("c"),
+                F.pmod(F.xxhash64("vid", F.lit(seed)), F.lit(1 << 40)).alias("prio"),
+                F.lit(None).cast("int").alias("color"),
             )
-        )
-        newly = (
-            cand.join(
-                blocked,
-                (cand.vid == blocked.vid) & (cand.c == blocked.ncolor),
-                "left_anti",
-            )
-            .groupBy("vid")
-            .agg(F.min("c").cast("int").alias("new_color"))
-        )
-        return state.join(newly, "vid", "left").select(
-            "vid", "prio", F.coalesce("color", "new_color").alias("color")
         )
 
-    state, _, _ = loop.run(init_state, step, count_where("color IS NULL"), 0)
-    init_state.unpersist()
-    sym.unpersist()
-    return state.filter(F.col("color").isNotNull()).select("vid", "color")
+        def step(state: DataFrame) -> DataFrame:
+            colored = state.filter(F.col("color").isNotNull()).select("vid", "color")
+            # winner test: no UNCOLORED neighbor with (higher prio, tie higher
+            # vid) — the local max of (prio, vid) is the local min of its
+            # negation
+            uncolored = state.filter(F.col("color").isNull()).select(
+                "vid", F.struct(-F.col("prio"), -F.col("vid")).alias("key")
+            )
+            frontier = local_minima(sym, uncolored).select("vid")
+            # mex over already-colored neighbors: explode 0..b candidates,
+            # anti-join the blocked set, take the min
+            blocked = (
+                frontier.join(sym, frontier.vid == sym.src)
+                .join(
+                    colored.select(
+                        F.col("vid").alias("dst"), F.col("color").alias("ncolor")
+                    ),
+                    "dst",
+                )
+                .select(F.col("src").alias("vid"), "ncolor")
+                .distinct()
+            )
+            nblocked = blocked.groupBy("vid").agg(F.count("*").alias("b"))
+            cand = (
+                frontier.join(nblocked, "vid", "left")
+                .select(
+                    "vid",
+                    F.explode(
+                        F.sequence(F.lit(0), F.coalesce(F.col("b"), F.lit(0)))
+                    ).alias("c"),
+                )
+            )
+            newly = (
+                cand.join(
+                    blocked,
+                    (cand.vid == blocked.vid) & (cand.c == blocked.ncolor),
+                    "left_anti",
+                )
+                .groupBy("vid")
+                .agg(F.min("c").cast("int").alias("new_color"))
+            )
+            return state.join(newly, "vid", "left").select(
+                "vid", "prio", F.coalesce("color", "new_color").alias("color")
+            )
+
+        state, _, _ = loop.run(init_state, step, count_where("color IS NULL"), 0)
+        return state.filter(F.col("color").isNotNull()).select("vid", "color")
 
 
 def verify_coloring(

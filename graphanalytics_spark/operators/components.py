@@ -29,22 +29,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.superstep import Supersteps, count_where, static_side
+from graphanalytics_spark.plans.superstep import Supersteps, count_where
 from graphanalytics_spark.plans.truncate import detach
 
 
 def initial_labels(sym: DataFrame, initial_state: DataFrame | None) -> DataFrame:
-    """Persisted (vid, label) state to start a labeling from: the resumed
+    """(vid, label) state to start a labeling from: the resumed
     ``initial_state`` (its ``label`` or ``component`` column), else every
     vertex of ``sym`` labeled with its own id."""
     if initial_state is not None:
         label = "label" if "label" in initial_state.columns else "component"
-        return initial_state.select("vid", F.col(label).alias("label")).persist()
+        return initial_state.select("vid", F.col(label).alias("label"))
     return (
         sym.select(F.col("src").alias("vid"))
         .distinct()
         .select("vid", F.col("vid").alias("label"))
-        .persist()
     )
 
 
@@ -74,59 +73,57 @@ def connected_components(
     # only added parquet round-trips (order-balanced 5-vs-8 A/B: wash at
     # sf0.1, strictly fewer V-sized writes at scale; chains stay ≤ 7,
     # under the measured ~9-link planning-degradation onset)
-    loop = Supersteps(
+    with Supersteps(
         spark, max_iter, checkpoint_every, check_every, metrics, checkpointer,
         name="connected_components",
-    )
-    # leaf input plan: the caller's plan stays out of every round's plan;
-    # static side partitioned on the gather key once — per round only the
-    # vertex-state table is exchanged (same policy as pagerank)
-    sym, n_edges = static_side(symmetrize(detach(edges_canon)).select("src", "dst"))
+    ) as loop:
+        # leaf input plan: the caller's plan stays out of every round's plan;
+        # static side partitioned on the gather key once — per round only the
+        # vertex-state table is exchanged (same policy as pagerank)
+        sym = loop.static(symmetrize(detach(edges_canon)).select("src", "dst"))
+        n_edges = sym.count()
+        init_state = loop.cache(initial_labels(sym, initial_state))
 
-    init_state = initial_labels(sym, initial_state)
-
-    def step(state: DataFrame) -> DataFrame:
-        state = state.drop("changed")
-        # 1) neighbor min
-        nbr_min = (
-            sym.join(state, sym.src == state.vid)
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.min("label").alias("nlabel"))
-        )
-        # carry the pre-round label through as `old` so `changed` needs no
-        # third V-sized join at the end of the round
-        merged = state.join(nbr_min, "vid", "left").select(
-            "vid",
-            F.col("label").alias("old"),
-            F.least("label", F.coalesce("nlabel", "label")).alias("label"),
-        )
-        # 2) pointer jumping: label <- label(label)
-        parent = merged.select(
-            F.col("vid").alias("pvid"), F.col("label").alias("plabel")
-        )
-        jumped = (
-            merged.join(parent, merged.label == parent.pvid, "left")
-            .select(
-                "vid",
-                "old",
-                F.least(merged.label, F.coalesce("plabel", merged.label)).alias(
-                    "new_label"
-                ),
+        def step(state: DataFrame) -> DataFrame:
+            state = state.drop("changed")
+            # 1) neighbor min
+            nbr_min = (
+                sym.join(state, sym.src == state.vid)
+                .groupBy(F.col("dst").alias("vid"))
+                .agg(F.min("label").alias("nlabel"))
             )
-        )
-        return jumped.select(
-            "vid",
-            F.col("new_label").alias("label"),
-            (F.col("new_label") != F.col("old")).alias("changed"),
-        )
+            # carry the pre-round label through as `old` so `changed` needs no
+            # third V-sized join at the end of the round
+            merged = state.join(nbr_min, "vid", "left").select(
+                "vid",
+                F.col("label").alias("old"),
+                F.least("label", F.coalesce("nlabel", "label")).alias("label"),
+            )
+            # 2) pointer jumping: label <- label(label)
+            parent = merged.select(
+                F.col("vid").alias("pvid"), F.col("label").alias("plabel")
+            )
+            jumped = (
+                merged.join(parent, merged.label == parent.pvid, "left")
+                .select(
+                    "vid",
+                    "old",
+                    F.least(merged.label, F.coalesce("plabel", merged.label)).alias(
+                        "new_label"
+                    ),
+                )
+            )
+            return jumped.select(
+                "vid",
+                F.col("new_label").alias("label"),
+                (F.col("new_label") != F.col("old")).alias("changed"),
+            )
 
-    def view(state: DataFrame) -> DataFrame:
-        return state.select("vid", F.col("label").alias("component"))
+        def view(state: DataFrame) -> DataFrame:
+            return state.select("vid", F.col("label").alias("component"))
 
-    state, _, _ = loop.run(init_state, step, count_where("changed"), n_edges, view)
-    init_state.unpersist()
-    sym.unpersist()
-    return view(state)
+        state, _, _ = loop.run(init_state, step, count_where("changed"), n_edges, view)
+        return view(state)
 
 
 def component_sizes(components: DataFrame) -> DataFrame:

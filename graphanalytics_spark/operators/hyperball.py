@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
 from graphanalytics_spark.plans.superstep import IterationMetrics, Supersteps, Unchanged
+from graphanalytics_spark.plans.truncate import detach
 
 
 def _sweep(
@@ -50,70 +51,73 @@ def _sweep(
     state (vid, sk, est, harmonic, sum_dist) and the curve from t=0,
     without the round that confirmed convergence."""
     metrics = IterationMetrics()
-    loop = Supersteps(
+    with Supersteps(
         spark, max_t, checkpoint_every, metrics=metrics, name=name, cap="max_t"
-    )
-    sym = symmetrize(edges_canon).select("src", "dst").persist()
-    n_edges = sym.count()
+    ) as loop:
+        # cached as read, not repartitioned through loop.static: a union's
+        # estimate depends on the order its sketches merge in, and a
+        # src-partitioned side moved N(4) from 561413 to 561424 (and 269 of
+        # 1892 per-vertex rows) on the sf0.01 graph
+        sym = loop.cache(symmetrize(detach(edges_canon)).select("src", "dst"))
+        n_edges = sym.count()
 
-    # round 0 goes through the truncator's hard reset, as every fourth
-    # round does: a union's estimate depends on the order its sketches
-    # merge in, so the start state's partitioning is part of the result
-    # (a persisted start state moved N(4) by one on the sf0.01 graph)
-    init_state = loop.truncator.truncate(
-        sym.select(F.col("src").alias("vid"))
-        .distinct()
-        .groupBy("vid")
-        .agg(F.hll_sketch_agg("vid", F.lit(lg_k)).alias("sk"))
-        .select(
-            "vid",
-            "sk",
-            F.hll_sketch_estimate("sk").alias("est"),
-            F.lit(0.0).alias("harmonic"),
-            F.lit(0.0).alias("sum_dist"),
-        ),
-        0,
-        stream="state",
-    )
-
-    def total(st: DataFrame) -> float:
-        return float(st.agg(F.sum("est").alias("n")).first()["n"])
-
-    rounds = iter(range(1, max_t + 1))
-
-    def step(state: DataFrame) -> DataFrame:
-        t = F.lit(float(next(rounds)))
-        nbr = (
-            sym.join(state, sym.src == state.vid)
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.hll_union_agg("sk").alias("nsk"))
-        )
-        sk = F.when(F.col("nsk").isNull(), F.col("sk")).otherwise(F.hll_union("sk", "nsk"))
-        merged = (
-            state.join(nbr, "vid", "left")
-            .select("vid", sk.alias("sk"), F.col("est").alias("prev_est"), "harmonic", "sum_dist")
-            .withColumn("est", F.hll_sketch_estimate("sk"))
-        )
-        gain = F.greatest(F.col("est") - F.col("prev_est"), F.lit(0.0))
-        return merged.select(
-            "vid",
-            "sk",
-            "est",
-            (F.col("harmonic") + gain / t).alias("harmonic"),
-            (F.col("sum_dist") + gain * t).alias("sum_dist"),
+        # round 0 goes through the truncator's hard reset, as every fourth
+        # round does: a union's estimate depends on the order its sketches
+        # merge in, so the start state's partitioning is part of the result
+        # (a persisted start state moved N(4) by one on the sf0.01 graph)
+        init_state = loop.truncator.truncate(
+            sym.select(F.col("src").alias("vid"))
+            .distinct()
+            .groupBy("vid")
+            .agg(F.hll_sketch_agg("vid", F.lit(lg_k)).alias("sk"))
+            .select(
+                "vid",
+                "sk",
+                F.hll_sketch_estimate("sk").alias("est"),
+                F.lit(0.0).alias("harmonic"),
+                F.lit(0.0).alias("sum_dist"),
+            ),
+            0,
+            stream="state",
         )
 
-    # Two consecutive flat rounds before stopping (r4 advice): in the
-    # sparse/linear-counting regime a register update can leave the
-    # estimate unchanged for one round while sketches are still growing,
-    # so a single flat total is not proof of the fixed point. Balls grow
-    # every round until they equal their component, so one extra sweep
-    # after true convergence is a no-op, and two flat totals in a row can
-    # only happen at the fixed point or at an estimate plateau the
-    # single-round break would also have accepted.
-    flat = Unchanged(total, total(init_state), r=2)
-    state, _, converged = loop.run(init_state, step, flat, n_edges)
-    sym.unpersist()
+        def total(st: DataFrame) -> float:
+            return float(st.agg(F.sum("est").alias("n")).first()["n"])
+
+        rounds = iter(range(1, max_t + 1))
+
+        def step(state: DataFrame) -> DataFrame:
+            t = F.lit(float(next(rounds)))
+            nbr = (
+                sym.join(state, sym.src == state.vid)
+                .groupBy(F.col("dst").alias("vid"))
+                .agg(F.hll_union_agg("sk").alias("nsk"))
+            )
+            sk = F.when(F.col("nsk").isNull(), F.col("sk")).otherwise(F.hll_union("sk", "nsk"))
+            merged = (
+                state.join(nbr, "vid", "left")
+                .select("vid", sk.alias("sk"), F.col("est").alias("prev_est"), "harmonic", "sum_dist")
+                .withColumn("est", F.hll_sketch_estimate("sk"))
+            )
+            gain = F.greatest(F.col("est") - F.col("prev_est"), F.lit(0.0))
+            return merged.select(
+                "vid",
+                "sk",
+                "est",
+                (F.col("harmonic") + gain / t).alias("harmonic"),
+                (F.col("sum_dist") + gain * t).alias("sum_dist"),
+            )
+
+        # Two consecutive flat rounds before stopping: in the
+        # sparse/linear-counting regime a register update can leave the
+        # estimate unchanged for one round while sketches are still growing,
+        # so a single flat total is not proof of the fixed point. Balls grow
+        # every round until they equal their component, so one extra sweep
+        # after true convergence is a no-op, and two flat totals in a row can
+        # only happen at the fixed point or at an estimate plateau the
+        # single-round break would also have accepted.
+        flat = Unchanged(total, total(init_state), r=2)
+        state, _, converged = loop.run(init_state, step, flat, n_edges)
     curve = [{"t": 0, "n_pairs_est": flat.values[0], "wall_s": 0.0}] + [
         {"t": row["iteration"], "n_pairs_est": n, "wall_s": row["wall_s"]}
         for row, n in zip(metrics.rows, flat.values[1:])

@@ -56,33 +56,30 @@ def kcore(
     count in the edges slot, so derived edges/s throughput is honest."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    loop = Supersteps(
+    with Supersteps(
         spark, max_rounds, checkpoint_every, metrics=metrics,
         name=f"kcore(k={k})", cap="max_rounds",
-    )
-    active = edges_canon.select("src", "dst").persist()
-    n_edges = active.count()  # one-time setup action
-    first = active
+    ) as loop:
+        active = loop.cache(edges_canon.select("src", "dst"))
+        n_edges = active.count()  # one-time setup action
 
-    def step(active: DataFrame) -> DataFrame:
-        ends = active.select(F.col("src").alias("vid")).unionAll(
-            active.select(F.col("dst").alias("vid"))
+        def step(active: DataFrame) -> DataFrame:
+            ends = active.select(F.col("src").alias("vid")).unionAll(
+                active.select(F.col("dst").alias("vid"))
+            )
+            deg = ends.groupBy("vid").agg(F.count("*").alias("core_degree"))
+            keep = deg.filter(F.col("core_degree") >= k).select("vid")
+            return active.join(
+                keep.withColumnRenamed("vid", "src"), "src", "left_semi"
+            ).join(keep.withColumnRenamed("vid", "dst"), "dst", "left_semi")
+
+        if n_edges:
+            peel = Unchanged(DataFrame.count, n_edges)
+            active, _, _ = loop.run(active, step, peel, lambda: peel.values[-1])
+
+        return (
+            active.select(F.col("src").alias("vid"))
+            .unionAll(active.select(F.col("dst").alias("vid")))
+            .groupBy("vid")
+            .agg(F.count("*").alias("core_degree"))
         )
-        deg = ends.groupBy("vid").agg(F.count("*").alias("core_degree"))
-        keep = deg.filter(F.col("core_degree") >= k).select("vid")
-        return active.join(
-            keep.withColumnRenamed("vid", "src"), "src", "left_semi"
-        ).join(keep.withColumnRenamed("vid", "dst"), "dst", "left_semi")
-
-    if n_edges:
-        peel = Unchanged(DataFrame.count, n_edges)
-        active, _, _ = loop.run(active, step, peel, lambda: peel.values[-1])
-
-    result = (
-        active.select(F.col("src").alias("vid"))
-        .unionAll(active.select(F.col("dst").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count("*").alias("core_degree"))
-    )
-    first.unpersist()
-    return result

@@ -113,35 +113,32 @@ def ktruss(
     if k < 2:
         raise ValueError("k must be >= 2 (k=2 keeps every edge)")
     need = k - 2
-    loop = Supersteps(
+    with Supersteps(
         spark, max_rounds, checkpoint_every, metrics=metrics,
         name=f"ktruss(k={k})", cap="max_rounds",
-    )
-    # peel in (degree, id)-oriented space: bounds every round's wedge
-    # fan-out by O(√m) where the former src<dst id-orientation was
-    # quadratic on a mid-id mega-hub; ids are mapped back on return
-    active = _orient_by_degree(edges_canon).persist()
-    n_edges = active.count()
-    first = active
+    ) as loop:
+        # peel in (degree, id)-oriented space: bounds every round's wedge
+        # fan-out by O(√m) where the former src<dst id-orientation was
+        # quadratic on a mid-id mega-hub; ids are mapped back on return
+        active = loop.cache(_orient_by_degree(edges_canon))
+        n_edges = active.count()
 
-    def step(active: DataFrame) -> DataFrame:
+        def step(active: DataFrame) -> DataFrame:
+            sup = _support(active)
+            return (
+                active.join(sup, ["src", "dst"], "left")
+                .filter(F.coalesce(F.col("support"), F.lit(0)) >= need)
+                .select("src", "dst")
+            )
+
+        if n_edges and need:
+            peel = Unchanged(DataFrame.count, n_edges)
+            active, _, _ = loop.run(active, step, peel, lambda: peel.values[-1])
+
         sup = _support(active)
-        return (
-            active.join(sup, ["src", "dst"], "left")
-            .filter(F.coalesce(F.col("support"), F.lit(0)) >= need)
-            .select("src", "dst")
+        return active.join(sup, ["src", "dst"], "left").select(
+            # map back to the canonical src<dst id orientation
+            F.least("src", "dst").alias("src"),
+            F.greatest("src", "dst").alias("dst"),
+            F.coalesce(F.col("support"), F.lit(0)).alias("support"),
         )
-
-    if n_edges and need:
-        peel = Unchanged(DataFrame.count, n_edges)
-        active, _, _ = loop.run(active, step, peel, lambda: peel.values[-1])
-
-    sup = _support(active)
-    result = active.join(sup, ["src", "dst"], "left").select(
-        # map back to the canonical src<dst id orientation
-        F.least("src", "dst").alias("src"),
-        F.greatest("src", "dst").alias("dst"),
-        F.coalesce(F.col("support"), F.lit(0)).alias("support"),
-    )
-    first.unpersist()
-    return result

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
 from graphanalytics_spark.operators.components import initial_labels
-from graphanalytics_spark.plans.superstep import Supersteps, count_where, static_side
+from graphanalytics_spark.plans.superstep import Supersteps, count_where
 from graphanalytics_spark.plans.truncate import detach
 
 
@@ -47,41 +47,39 @@ def label_propagation(
     # hard cadence 8 (was 5): the every-2-sweep stop-test count already
     # finalizes the lazy localCheckpoints; order-balanced 5-vs-8 A/B had
     # 8 faster in all four pairs (3.0-3.2 vs 3.2-4.0 s warm at sf0.1)
-    loop = Supersteps(
+    with Supersteps(
         spark, max_iter, checkpoint_every, check_every, metrics, checkpointer,
         name="label_propagation",
-    )
-    # leaf input plan: the caller's plan stays out of every sweep's plan;
-    # static side partitioned on the gather key once (pagerank policy)
-    sym, n_edges = static_side(symmetrize(detach(edges_canon)))
+    ) as loop:
+        # leaf input plan: the caller's plan stays out of every sweep's plan;
+        # static side partitioned on the gather key once (pagerank policy)
+        sym = loop.static(symmetrize(detach(edges_canon)))
+        n_edges = sym.count()
+        init_state = loop.cache(initial_labels(sym, initial_state))
 
-    init_state = initial_labels(sym, initial_state)
-
-    def step(state: DataFrame) -> DataFrame:
-        state = state.drop("changed")
-        # gather: per (vertex, neighbor-label) summed weight, then argmax
-        # with ties to the smaller label via max(struct(w, -label)).
-        nbr = (
-            sym.join(state, sym.src == state.vid)
-            .groupBy(F.col("dst").alias("v"), F.col("label").alias("nlabel"))
-            .agg(F.sum("weight").alias("w"))
-        )
-        best = nbr.groupBy(F.col("v").alias("vid")).agg(
-            F.max(F.struct(F.col("w"), (-F.col("nlabel")).alias("neg"))).alias("m")
-        ).select("vid", (-F.col("m.neg")).alias("new_label"))
-        return (
-            state.join(best, "vid", "left")
-            .select(
-                "vid",
-                F.coalesce("new_label", "label").alias("label"),
-                (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
+        def step(state: DataFrame) -> DataFrame:
+            state = state.drop("changed")
+            # gather: per (vertex, neighbor-label) summed weight, then argmax
+            # with ties to the smaller label via max(struct(w, -label)).
+            nbr = (
+                sym.join(state, sym.src == state.vid)
+                .groupBy(F.col("dst").alias("v"), F.col("label").alias("nlabel"))
+                .agg(F.sum("weight").alias("w"))
             )
-        )
+            best = nbr.groupBy(F.col("v").alias("vid")).agg(
+                F.max(F.struct(F.col("w"), (-F.col("nlabel")).alias("neg"))).alias("m")
+            ).select("vid", (-F.col("m.neg")).alias("new_label"))
+            return (
+                state.join(best, "vid", "left")
+                .select(
+                    "vid",
+                    F.coalesce("new_label", "label").alias("label"),
+                    (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
+                )
+            )
 
-    def view(state: DataFrame) -> DataFrame:
-        return state.select("vid", "label")
+        def view(state: DataFrame) -> DataFrame:
+            return state.select("vid", "label")
 
-    state, _, _ = loop.run(init_state, step, count_where("changed"), n_edges, view)
-    init_state.unpersist()
-    sym.unpersist()
-    return view(state)
+        state, _, _ = loop.run(init_state, step, count_where("changed"), n_edges, view)
+        return view(state)

@@ -50,7 +50,7 @@ from graphanalytics_spark.operators.contraction import contract_graph
 from graphanalytics_spark.operators.mis import local_minima
 from graphanalytics_spark.operators.modularity import modularity
 from graphanalytics_spark.plans.superstep import Supersteps, count_where
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.truncate import LineageTruncator, detach
 
 
 def _one_phase(
@@ -70,135 +70,135 @@ def _one_phase(
     # pagerank cadence sweep showed degradation starts near chain length
     # ~9 and is severe by ~19, so 8 keeps headroom; at cluster scale fewer
     # V-sized parquet round-trips is also strictly less I/O.
-    loop = Supersteps(spark, max_rounds, 8, name="louvain", cap="max_rounds_per_phase")
-    sym = symmetrize(edges_canon.filter(F.col("src") != F.col("dst"))).persist()
-    self_w = edges_canon.filter(F.col("src") == F.col("dst")).select(
-        F.col("src").alias("vid"), F.col("weight").alias("self_w")
-    )
-    # weighted degree incl. self-loops (counted twice per Louvain convention)
-    deg = (
-        sym.groupBy(F.col("src").alias("vid"))
-        .agg(F.sum("weight").alias("wdeg"))
-        .join(self_w, "vid", "left")
-        .select(
-            "vid",
-            (F.col("wdeg") + 2 * F.coalesce("self_w", F.lit(0.0))).alias("wdeg"),
+    with Supersteps(
+        spark, max_rounds, 8, name="louvain", cap="max_rounds_per_phase"
+    ) as loop:
+        edges_canon = detach(edges_canon)
+        sym = loop.static(
+            symmetrize(edges_canon.filter(F.col("src") != F.col("dst")))
         )
-        .persist()
-    )
-    # 2m = twice the total weight (sym doubles non-self edges, self-loops
-    # count twice by convention) — ONE tiny aggregation on the canonical
-    # table instead of two driver actions (guide §1.2)
-    two_m = 2 * (edges_canon.agg(F.sum("weight")).first()[0] or 0.0)
-    if two_m == 0:
-        out = deg.select("vid", F.col("vid").alias("label"))
-        out = out.localCheckpoint(eager=True)  # detach before unpersisting deps
-        sym.unpersist()
-        deg.unpersist()
-        return out, 0
-
-    state = loop.truncator.truncate(
-        deg.select("vid", F.col("vid").alias("label"), "wdeg"), 0, stream="state"
-    )
-    rounds = iter(range(1, max_rounds + 1))
-
-    def step(state: DataFrame) -> DataFrame:
-        # neighbor-community incident weights w_{v,c}, with a zero-weight
-        # row for every vertex's CURRENT community unioned in before the
-        # aggregation. That one union makes the stay baseline a plain
-        # per-group expression: the c==cur row's gain IS the grappolo stay
-        # gain (w_{v,cur} − wdeg·(tot_cur−wdeg)/2m, w_{v,cur}=0 when v has
-        # no intra-community neighbor — adding 0.0 to a finite sum moves
-        # nothing), so `best` and `stay` collapse into ONE aggregation
-        # where the previous shape ran three extra joins (own/stay/desire
-        # re-join against state+tot) and re-derived `cand` in two branches
-        # (guide §2.4/§3.3). The move set is provably unchanged: for the
-        # added rows gain==stay_gain, so they can never win the strict
-        # `> stay_gain` filter, and when one ties the struct-argmax it
-        # yields best_c==cur, which the second filter drops — exactly the
-        # cases the old shape also rejected.
-        lab_dst = state.select(F.col("vid").alias("dst"), F.col("label").alias("c"))
-        incid = sym.join(lab_dst, "dst").select(
-            F.col("src").alias("vid"), "c", "weight"
+        self_w = edges_canon.filter(F.col("src") == F.col("dst")).select(
+            F.col("src").alias("vid"), F.col("weight").alias("self_w")
         )
-        own_zero = state.select(
-            "vid", F.col("label").alias("c"), F.lit(0.0).alias("weight")
-        )
-        wvc = (
-            incid.unionByName(own_zero)
-            .groupBy("vid", "c")
-            .agg(F.sum("weight").alias("w_vc"))
-        )
-        # community totals Σ wdeg
-        tot = state.groupBy("label").agg(F.sum("wdeg").alias("tot"))
-        cur = state.select("vid", F.col("label").alias("cur"), "wdeg")
-        cand = (
-            wvc.join(cur, "vid")
-            .join(tot.withColumnRenamed("label", "c"), "c")
+        # weighted degree incl. self-loops (counted twice per Louvain convention)
+        deg = loop.cache(
+            sym.groupBy(F.col("src").alias("vid"))
+            .agg(F.sum("weight").alias("wdeg"))
+            .join(self_w, "vid", "left")
             .select(
                 "vid",
-                "c",
-                "cur",
+                (F.col("wdeg") + 2 * F.coalesce("self_w", F.lit(0.0))).alias("wdeg"),
+            )
+        )
+        # 2m = twice the total weight (sym doubles non-self edges, self-loops
+        # count twice by convention) — ONE tiny aggregation on the canonical
+        # table instead of two driver actions
+        two_m = 2 * (edges_canon.agg(F.sum("weight")).first()[0] or 0.0)
+        if two_m == 0:
+            # eager: the labels must outlive the cached deg they are read from
+            out = deg.select("vid", F.col("vid").alias("label"))
+            return out.localCheckpoint(eager=True), 0
+
+        state = loop.truncator.truncate(
+            deg.select("vid", F.col("vid").alias("label"), "wdeg"), 0, stream="state"
+        )
+        rounds = iter(range(1, max_rounds + 1))
+
+        def step(state: DataFrame) -> DataFrame:
+            # neighbor-community incident weights w_{v,c}, with a zero-weight
+            # row for every vertex's CURRENT community unioned in before the
+            # aggregation. That one union makes the stay baseline a plain
+            # per-group expression: the c==cur row's gain IS the grappolo stay
+            # gain (w_{v,cur} − wdeg·(tot_cur−wdeg)/2m, w_{v,cur}=0 when v has
+            # no intra-community neighbor — adding 0.0 to a finite sum moves
+            # nothing), so `best` and `stay` collapse into ONE aggregation
+            # where the previous shape ran three extra joins (own/stay/desire
+            # re-join against state+tot) and re-derived `cand` in two
+            # branches. The move set is provably unchanged: for the
+            # added rows gain==stay_gain, so they can never win the strict
+            # `> stay_gain` filter, and when one ties the struct-argmax it
+            # yields best_c==cur, which the second filter drops — exactly the
+            # cases the old shape also rejected.
+            lab_dst = state.select(F.col("vid").alias("dst"), F.col("label").alias("c"))
+            incid = sym.join(lab_dst, "dst").select(
+                F.col("src").alias("vid"), "c", "weight"
+            )
+            own_zero = state.select(
+                "vid", F.col("label").alias("c"), F.lit(0.0).alias("weight")
+            )
+            wvc = (
+                incid.unionByName(own_zero)
+                .groupBy("vid", "c")
+                .agg(F.sum("weight").alias("w_vc"))
+            )
+            # community totals Σ wdeg
+            tot = state.groupBy("label").agg(F.sum("wdeg").alias("tot"))
+            cur = state.select("vid", F.col("label").alias("cur"), "wdeg")
+            cand = (
+                wvc.join(cur, "vid")
+                .join(tot.withColumnRenamed("label", "c"), "c")
+                .select(
+                    "vid",
+                    "c",
+                    "cur",
+                    "wdeg",
+                    # tot_c excluding v itself when c is v's current community
+                    F.when(F.col("c") == F.col("cur"), F.col("tot") - F.col("wdeg"))
+                    .otherwise(F.col("tot"))
+                    .alias("tot_x"),
+                    "w_vc",
+                )
+                .withColumn(
+                    "gain",
+                    F.col("w_vc") - F.col("wdeg") * F.col("tot_x") / F.lit(two_m),
+                )
+            )
+            # argmax with reference tie rules (higher gain, then smaller c)
+            # and the stay baseline from the same rows, one hash aggregation
+            summary = cand.groupBy("vid", "cur").agg(
+                F.max(F.struct(F.col("gain"), (-F.col("c")).alias("negc"))).alias("m"),
+                F.max(
+                    F.when(F.col("c") == F.col("cur"), F.col("gain"))
+                ).alias("stay_gain"),
+            )
+            # vertices that WANT to move (positive gain over staying).
+            # Materialized eagerly: three plan branches consume it (both sides
+            # of the conflict join and the movers anti-join), and without the
+            # checkpoint each branch re-runs the whole gather/argmax subtree —
+            # measured 2.1-2.5 s/round recomputed vs 1.5-1.7 s materialized on
+            # the phase-1 bench ring (duplicated subtrees; blocks
+            # reclaimed by the ContextCleaner).
+            pr = F.xxhash64("vid", F.lit(seed + next(rounds)))
+            desire = (
+                summary.filter(
+                    (F.col("m.gain") > F.col("stay_gain"))
+                    & ((-F.col("m.negc")) != F.col("cur"))
+                )
+                .select(
+                    "vid",
+                    (-F.col("m.negc")).alias("best_c"),
+                    F.struct(pr.alias("pr"), "vid").alias("key"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            # conflict-free move set: of two ADJACENT desiring vertices only the
+            # one with the smaller per-round hash priority moves — the Spark
+            # restatement of the reference's distance-1 coloring
+            # (coloringDistanceOne.cpp:52): no simultaneous adjacent moves, so
+            # the classic two-vertex swap oscillation cannot occur and each
+            # move's gain was evaluated with its neighborhood held fixed.
+            movers = local_minima(sym, desire).select(
+                "vid", F.col("best_c").alias("new_label")
+            )
+            return state.join(movers, "vid", "left").select(
+                "vid",
+                F.coalesce("new_label", "label").alias("label"),
                 "wdeg",
-                # tot_c excluding v itself when c is v's current community
-                F.when(F.col("c") == F.col("cur"), F.col("tot") - F.col("wdeg"))
-                .otherwise(F.col("tot"))
-                .alias("tot_x"),
-                "w_vc",
+                (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
             )
-            .withColumn(
-                "gain",
-                F.col("w_vc") - F.col("wdeg") * F.col("tot_x") / F.lit(two_m),
-            )
-        )
-        # argmax with reference tie rules (higher gain, then smaller c)
-        # and the stay baseline from the same rows, one hash aggregation
-        summary = cand.groupBy("vid", "cur").agg(
-            F.max(F.struct(F.col("gain"), (-F.col("c")).alias("negc"))).alias("m"),
-            F.max(
-                F.when(F.col("c") == F.col("cur"), F.col("gain"))
-            ).alias("stay_gain"),
-        )
-        # vertices that WANT to move (positive gain over staying).
-        # Materialized eagerly: three plan branches consume it (both sides
-        # of the conflict join and the movers anti-join), and without the
-        # checkpoint each branch re-runs the whole gather/argmax subtree —
-        # measured 2.1-2.5 s/round recomputed vs 1.5-1.7 s materialized on
-        # the phase-1 bench ring (guide §3.3 duplicated subtrees; blocks
-        # reclaimed by the ContextCleaner).
-        pr = F.xxhash64("vid", F.lit(seed + next(rounds)))
-        desire = (
-            summary.filter(
-                (F.col("m.gain") > F.col("stay_gain"))
-                & ((-F.col("m.negc")) != F.col("cur"))
-            )
-            .select(
-                "vid",
-                (-F.col("m.negc")).alias("best_c"),
-                F.struct(pr.alias("pr"), "vid").alias("key"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # conflict-free move set: of two ADJACENT desiring vertices only the
-        # one with the smaller per-round hash priority moves — the Spark
-        # restatement of the reference's distance-1 coloring
-        # (coloringDistanceOne.cpp:52): no simultaneous adjacent moves, so
-        # the classic two-vertex swap oscillation cannot occur and each
-        # move's gain was evaluated with its neighborhood held fixed.
-        movers = local_minima(sym, desire).select(
-            "vid", F.col("best_c").alias("new_label")
-        )
-        return state.join(movers, "vid", "left").select(
-            "vid",
-            F.coalesce("new_label", "label").alias("label"),
-            "wdeg",
-            (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
-        )
 
-    state, rounds_used, _ = loop.run(state, step, count_where("changed"), 0)
-    sym.unpersist()
-    deg.unpersist()
-    return state.select("vid", "label"), rounds_used
+        state, rounds_used, _ = loop.run(state, step, count_where("changed"), 0)
+        return state.select("vid", "label"), rounds_used
 
 
 def louvain(

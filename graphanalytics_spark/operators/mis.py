@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
 from graphanalytics_spark.plans.superstep import Supersteps, count_where
+from graphanalytics_spark.plans.truncate import detach
 
 
 def local_minima(sym: DataFrame, cand: DataFrame) -> DataFrame:
@@ -61,53 +62,49 @@ def maximal_independent_set(
     undirected graph. Deterministic for a given seed. Warns when
     ``max_iter`` rounds leave vertices undecided; the set returned is then
     independent but not maximal."""
-    loop = Supersteps(spark, max_iter, 4, name="maximal_independent_set")
-    sym = symmetrize(edges_canon).select("src", "dst").persist()
-    deg = sym.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("deg"))
-    avg_deg = deg.agg(F.avg("deg")).first()[0]
-    if avg_deg is None:  # empty graph
-        sym.unpersist()
-        return spark.createDataFrame([], "vid long")
-    # degree-biased deterministic priority; lower = stronger claim.
-    # in_set is NULL while the vertex is still active
-    init_state = deg.select(
-        "vid",
-        (
+    with Supersteps(spark, max_iter, 4, name="maximal_independent_set") as loop:
+        sym = loop.static(symmetrize(detach(edges_canon)).select("src", "dst"))
+        deg = sym.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("deg"))
+        avg_deg = deg.agg(F.avg("deg")).first()[0]
+        if avg_deg is None:  # empty graph
+            return spark.createDataFrame([], "vid long")
+        # degree-biased deterministic priority; lower = stronger claim.
+        # in_set is NULL while the vertex is still active
+        prio = (
             F.pmod(F.xxhash64("vid", F.lit(seed)), F.lit(1 << 20)).cast("double")
             / F.lit(float(1 << 20))
             * (F.col("deg") + F.lit(float(avg_deg)))
             / F.lit(float(avg_deg))
-        ).alias("prio"),
-        F.lit(None).cast("boolean").alias("in_set"),
-    ).persist()
-
-    def step(state: DataFrame) -> DataFrame:
-        # a vertex wins if no active neighbor has (smaller prio, tie
-        # smaller vid); winners join the set, their neighbors leave it
-        active = state.filter(F.col("in_set").isNull())
-        won = local_minima(
-            sym, active.select("vid", F.struct("prio", "vid").alias("key"))
-        ).select("vid")
-        lost = sym.join(won.withColumnRenamed("vid", "src"), "src", "left_semi").select(
-            F.col("dst").alias("vid"), F.lit(False).alias("won")
         )
-        # one aggregation on vid both dedups the losers and leaves decided
-        # partitioned for the state join (a distinct of the losers before
-        # the union ran 71 jobs per call on the sf0.01 graph, this 63)
-        decided = (
-            won.withColumn("won", F.lit(True))
-            .unionByName(lost)
-            .groupBy("vid")
-            .agg(F.max("won").alias("won"))
-        )
-        return state.join(decided, "vid", "left").select(
-            "vid", "prio", F.coalesce("in_set", "won").alias("in_set")
+        init_state = loop.cache(
+            deg.select("vid", prio.alias("prio"), F.lit(None).cast("boolean").alias("in_set"))
         )
 
-    state, _, _ = loop.run(init_state, step, count_where("in_set IS NULL"), 0)
-    init_state.unpersist()
-    sym.unpersist()
-    return state.filter("in_set").select("vid")
+        def step(state: DataFrame) -> DataFrame:
+            # a vertex wins if no active neighbor has (smaller prio, tie
+            # smaller vid); winners join the set, their neighbors leave it
+            active = state.filter(F.col("in_set").isNull())
+            won = local_minima(
+                sym, active.select("vid", F.struct("prio", "vid").alias("key"))
+            ).select("vid")
+            lost = sym.join(won.withColumnRenamed("vid", "src"), "src", "left_semi").select(
+                F.col("dst").alias("vid"), F.lit(False).alias("won")
+            )
+            # one aggregation on vid both dedups the losers and leaves decided
+            # partitioned for the state join (a distinct of the losers before
+            # the union ran 71 jobs per call on the sf0.01 graph, this 63)
+            decided = (
+                won.withColumn("won", F.lit(True))
+                .unionByName(lost)
+                .groupBy("vid")
+                .agg(F.max("won").alias("won"))
+            )
+            return state.join(decided, "vid", "left").select(
+                "vid", "prio", F.coalesce("in_set", "won").alias("in_set")
+            )
+
+        state, _, _ = loop.run(init_state, step, count_where("in_set IS NULL"), 0)
+        return state.filter("in_set").select("vid")
 
 
 def verify_mis(spark: SparkSession, edges_canon: DataFrame, mis: DataFrame) -> dict:

@@ -58,7 +58,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from graphanalytics_spark.plans.superstep import IterationMetrics, Supersteps, static_side
+from graphanalytics_spark.plans.superstep import IterationMetrics, Supersteps
 from graphanalytics_spark.plans.truncate import detach
 
 
@@ -84,8 +84,8 @@ class _JoinGather:
 
     carry = ()
 
-    def links(self, edges: DataFrame) -> tuple[DataFrame, int]:
-        return static_side(edges.select("src", "dst", "weight"), build=_fractions)
+    def links(self, loop: Supersteps, edges: DataFrame) -> DataFrame:
+        return loop.static(edges.select("src", "dst", "weight"), build=_fractions)
 
     def tag(self, state: DataFrame) -> DataFrame:
         return state
@@ -116,9 +116,9 @@ class _CsrGather:
     def _block(self, col: str):
         return F.pmod(F.xxhash64(col), F.lit(self.n_blocks))
 
-    def links(self, edges: DataFrame) -> tuple[DataFrame, int]:
+    def links(self, loop: Supersteps, edges: DataFrame) -> DataFrame:
         out = edges.groupBy("src").agg(F.sum("weight").alias("wdeg"))
-        return static_side(
+        return loop.static(
             edges.join(out, "src").select(
                 "src",
                 "dst",
@@ -200,20 +200,21 @@ def _pagerank(
     tol: float,
     initial_state: DataFrame | None = None,
 ) -> DataFrame:
-    """The PageRank body: ``seeds`` None is the uniform reset, else the
-    reset is uniform over the seeds; ``gather`` is a ``_JoinGather`` or a
-    ``_CsrGather``. Returns DataFrame(vid, rank)."""
+    """The PageRank body, run inside the ``loop``'s block: ``seeds`` None
+    is the uniform reset, else the reset is uniform over the seeds;
+    ``gather`` is a ``_JoinGather`` or a ``_CsrGather``. Returns
+    DataFrame(vid, rank)."""
     edges = detach(edges)
-    links, n_links = gather.links(edges)
+    links = gather.links(loop, edges)
+    n_links = links.count()
     # vertex set + static dangling flag (no out-edges) in ONE aggregation:
     # the previous shape (union-distinct + distinct + join) cost two
     # distinct shuffles and a join for the same table (guide §2.4)
-    verts = (
+    verts = loop.cache(
         edges.select(F.col("src").alias("vid"), F.lit(1).alias("o"))
         .unionAll(edges.select(F.col("dst").alias("vid"), F.lit(0).alias("o")))
         .groupBy("vid")
         .agg((F.max("o") == 0).alias("dangling"))
-        .persist()
     )
     cnt = verts.agg(
         F.count("*").alias("n"),
@@ -232,12 +233,7 @@ def _pagerank(
             return F.lit(base) + F.lit(damping) * (gathered + dm)
 
     else:
-        try:
-            init = _seeded(verts, seeds)
-        except ValueError:
-            verts.unpersist()
-            links.unpersist()
-            raise
+        init = _seeded(verts, seeds)
 
         def share(mass):
             return mass
@@ -254,7 +250,7 @@ def _pagerank(
     # checkpointed state rows, one less branch per superstep
     lead = ["base"] if seeds is not None else []
     tail = (["dangling"] if has_dangling else []) + list(gather.carry)
-    init_state = gather.tag(init).select("vid", *lead, "rank", *tail).persist()
+    init_state = loop.cache(gather.tag(init).select("vid", *lead, "rank", *tail))
 
     def step(state: DataFrame) -> DataFrame:
         state = state.drop("delta")
@@ -286,9 +282,6 @@ def _pagerank(
         n_links,
         view=lambda s: s.select("vid", "rank"),
     )
-    init_state.unpersist()
-    verts.unpersist()
-    links.unpersist()
     return state.select("vid", "rank")
 
 
@@ -326,11 +319,11 @@ def pagerank(
 
     The input is detached from the caller's plan first (plans/truncate.py
     ``detach``), so no superstep plan carries that plan along."""
-    loop = Supersteps(
+    with Supersteps(
         spark, max_iter, checkpoint_every, check_every, metrics, checkpointer,
         name="pagerank",
-    )
-    return _pagerank(loop, edges, _JoinGather(), None, damping, tol, initial_state)
+    ) as loop:
+        return _pagerank(loop, edges, _JoinGather(), None, damping, tol, initial_state)
 
 
 def pagerank_csr(
@@ -347,10 +340,10 @@ def pagerank_csr(
     """``pagerank`` with the gather expressed as per-partition CSR blocks
     inside a cogrouped Arrow UDF (``_CsrGather``): edges are blocked by
     hash(src) % n_blocks and the state is co-blocked on vid."""
-    loop = Supersteps(
+    with Supersteps(
         spark, max_iter, checkpoint_every, check_every, metrics, name="pagerank_csr"
-    )
-    return _pagerank(loop, edges, _CsrGather(n_blocks), None, damping, tol)
+    ) as loop:
+        return _pagerank(loop, edges, _CsrGather(n_blocks), None, damping, tol)
 
 
 def pagerank_fixed(
@@ -403,11 +396,11 @@ def personalized_pagerank(
     walk instead of feature cosine). Dangling mass re-enters through the
     reset distribution, so Σ rank = 1 is preserved; with every vertex a
     seed this is ``pagerank``."""
-    loop = Supersteps(
+    with Supersteps(
         spark, max_iter, checkpoint_every, check_every, metrics,
         name="personalized_pagerank",
-    )
-    return _pagerank(loop, edges, _JoinGather(), seeds, damping, tol)
+    ) as loop:
+        return _pagerank(loop, edges, _JoinGather(), seeds, damping, tol)
 
 
 def personalized_pagerank_fixed(

@@ -3,14 +3,19 @@
 An operator supplies a step (state → new state) and a stop test on the
 truncated new state; ``Supersteps`` owns the lineage truncation, the
 stop-test cadence, the metrics rows, the checkpointer hook and the
-warning when the cap cuts a run. The loop sets no Spark job group;
-whoever profiles the run owns those. ``static_side`` builds the
-operator's static join side; ``count_where`` and ``Unchanged`` are the
-shared stop tests.
+warning when the cap cuts a run. It also owns every table the run
+caches: an operator runs its body in ``with Supersteps(…) as loop:``,
+caches through ``loop.cache`` (or ``loop.static``, the static join side
+hash-partitioned on its gather key) and never unpersists by hand — the
+block's exit releases them all, whether it returns or raises. The loop
+sets no Spark job group; whoever profiles the run owns those.
+``count_where`` and ``Unchanged`` are the shared stop tests.
 """
 
 from __future__ import annotations
 
+import os
+import sys
 import time
 import warnings
 from dataclasses import dataclass, field
@@ -19,6 +24,9 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from graphanalytics_spark.plans.truncate import LineageTruncator
+
+# the package root: a cap warning names the first frame outside it
+_PACKAGE = os.path.dirname(os.path.dirname(os.path.abspath(__file__))) + os.sep
 
 
 @dataclass
@@ -51,28 +59,6 @@ class IterationMetrics:
         return len(self.rows)
 
 
-def static_side(
-    df: DataFrame,
-    key: str = "src",
-    build: Callable[[DataFrame], DataFrame] | None = None,
-) -> tuple[DataFrame, int]:
-    """(static side, row count): the detached ``df`` hash-partitioned on
-    ``key`` to the session's shuffle partitions, passed through ``build``
-    (whose aggregations and joins on ``key`` reuse that partitioning),
-    persisted and counted. Each superstep's gather then reads it in place
-    and exchanges only the vertex state."""
-    spark = df.sparkSession
-    try:
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        partitions = spark.sparkContext.defaultParallelism
-    out = df.repartition(partitions, key)
-    if build is not None:
-        out = build(out)
-    out = out.persist()
-    return out, out.count()
-
-
 def count_where(predicate: str) -> Callable[[DataFrame], tuple[float, bool]]:
     """Stop test of a step that flags the vertices still in play, e.g.
     ``"changed"`` (CC, LPA, SSSP, louvain) or ``"in_set IS NULL"`` (MIS):
@@ -102,12 +88,13 @@ class Unchanged:
 
 @dataclass
 class Supersteps:
-    """Cadence, metrics and checkpoint policy of one operator run.
+    """Cadence, metrics, checkpoint and cache policy of one operator run.
 
-    Build it before the operator persists anything: a ``checkpoint_every``
+    Build it before the operator caches anything: a ``checkpoint_every``
     (hard-reset cadence) or ``check_every`` (stop-test cadence) below 1 is
     rejected before any job runs. ``name`` and ``cap`` (the operator's
-    name for ``max_iter``) word the truncation warning."""
+    name for ``max_iter``) word the truncation warning. As a context
+    manager it unpersists every table ``cache`` recorded on exit."""
 
     spark: SparkSession
     max_iter: int
@@ -125,6 +112,42 @@ class Supersteps:
                 f"got {self.check_every}"
             )
         self.truncator = LineageTruncator(self.spark, hard_every=self.checkpoint_every)
+        self._cached: list[DataFrame] = []
+
+    def __enter__(self) -> Supersteps:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        while self._cached:
+            self._cached.pop().unpersist()
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """``df`` persisted until the run's block exits."""
+        df = df.persist()
+        self._cached.append(df)
+        return df
+
+    def static(
+        self,
+        df: DataFrame,
+        key: str = "src",
+        build: Callable[[DataFrame], DataFrame] | None = None,
+    ) -> DataFrame:
+        """The static join side: ``df`` hash-partitioned on ``key`` to the
+        session's shuffle partitions, passed through ``build`` (whose
+        aggregations and joins on ``key`` reuse that partitioning) and
+        cached. Each superstep's gather then reads it in place and
+        exchanges only the vertex state. It is not counted: callers that
+        need its size count it (a count here cost louvain two jobs per
+        phase)."""
+        try:
+            partitions = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        except (TypeError, ValueError):
+            partitions = self.spark.sparkContext.defaultParallelism
+        out = df.repartition(partitions, key)
+        if build is not None:
+            out = build(out)
+        return self.cache(out)
 
     def run(
         self,
@@ -165,11 +188,15 @@ class Supersteps:
             if converged:
                 break
         if delta is not None and not converged:
+            # name the caller's line, not the operator's call into the loop
+            frame, level = sys._getframe(), 1
+            while frame.f_back is not None and frame.f_code.co_filename.startswith(_PACKAGE):
+                frame, level = frame.f_back, level + 1
             warnings.warn(
                 f"{self.name} stopped at {self.cap}={self.max_iter} before "
                 f"converging (last delta {delta}): the result is cut short. "
                 f"Raise {self.cap}.",
                 RuntimeWarning,
-                stacklevel=3,
+                stacklevel=level,
             )
         return state, it, converged

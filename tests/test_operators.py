@@ -7,6 +7,7 @@ import pytest
 
 from graphanalytics_spark import fixtures, graph
 from graphanalytics_spark.operators import (
+    betweenness,
     coloring,
     components,
     contraction,
@@ -292,21 +293,62 @@ def test_components_warns_when_max_iter_cuts_the_labels(spark):
             lambda spark, ec, cut: louvain.louvain(spark, ec, max_rounds_per_phase=1 if cut else 20).count(),
             "max_rounds_per_phase",
         ),
+        (lambda spark, ec, cut: pagerank.pagerank(spark, ec, max_iter=2 if cut else 100).count(), "max_iter"),
     ],
-    ids=["neighborhood", "per_vertex", "coloring", "mis", "louvain"],
+    ids=["neighborhood", "per_vertex", "coloring", "mis", "louvain", "pagerank"],
 )
 def test_cap_warns_when_it_cuts_the_run(spark, run, cap):
-    """A cap that cuts the 64-vertex path's run warns, naming the cap; a
-    run that converges under the default cap does not."""
+    """A cap that cuts the 64-vertex path's run warns, naming the cap and
+    the caller's line (not a line inside the package); a run that
+    converges under the default cap does not."""
     import warnings as _w
 
     path = graph.canonicalize(fixtures.edges_df(spark, [(i, i + 1) for i in range(63)]))
-    with pytest.warns(RuntimeWarning, match=cap):
+    with pytest.warns(RuntimeWarning, match=cap) as records:
         run(spark, path, True)
+    cut = [r for r in records if cap in str(r.message)]
+    assert cut and all(r.filename == __file__ for r in cut), [
+        (r.filename, r.lineno) for r in cut
+    ]
     bridge = graph.canonicalize(fixtures.edges_df(spark, fixtures.TWO_TRIANGLES_BRIDGE))
     with _w.catch_warnings():
         _w.simplefilter("error", RuntimeWarning)
         run(spark, bridge, False)
+
+
+class _FailingCheckpointer:
+    def maybe_save(self, iteration, state, metric):
+        raise OSError("snapshot store unavailable")
+
+
+@pytest.mark.parametrize(
+    "run,error",
+    [
+        (
+            lambda spark, ec: components.connected_components(
+                spark, ec, checkpointer=_FailingCheckpointer()
+            ),
+            OSError,
+        ),
+        (
+            lambda spark, ec: pagerank.pagerank(
+                spark, graph.symmetrize(ec), checkpointer=_FailingCheckpointer()
+            ),
+            OSError,
+        ),
+        (lambda spark, ec: betweenness.betweenness(spark, ec, seeds=[]), ValueError),
+    ],
+    ids=["components", "pagerank", "betweenness"],
+)
+def test_a_run_that_raises_leaves_nothing_cached(spark, run, error):
+    """An operator that raises midway (a checkpointer failing inside the
+    superstep loop, or a rejected argument) releases every table it
+    cached."""
+    spark.catalog.clearCache()
+    ec = graph.canonicalize(fixtures.edges_df(spark, fixtures.TWO_TRIANGLES_BRIDGE))
+    with pytest.raises(error):
+        run(spark, ec)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_nhop_pairs_reachability_and_min_hops(spark):

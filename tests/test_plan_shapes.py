@@ -346,12 +346,21 @@ def _chained_input(spark):
     return edges
 
 
-@pytest.mark.parametrize("operator", ["pagerank", "components", "labelprop"])
+@pytest.mark.parametrize(
+    "operator", ["pagerank", "components", "labelprop", "mis", "coloring", "louvain"]
+)
 def test_static_side_plans_as_leaf_scan(spark, monkeypatch, operator):
     """The persisted static side is built over a leaf scan of the input,
     not over the caller's chain: its cached plan reads one detached RDD
     (twice where the operator symmetrizes it) and no union branch."""
-    from graphanalytics_spark.operators import components, labelprop, pagerank
+    from graphanalytics_spark.operators import (
+        coloring,
+        components,
+        labelprop,
+        louvain,
+        mis,
+        pagerank,
+    )
 
     edges = _chained_input(spark)
     run = {
@@ -364,6 +373,11 @@ def test_static_side_plans_as_leaf_scan(spark, monkeypatch, operator):
         "labelprop": lambda: labelprop.label_propagation(
             spark, edges, max_iter=4
         ).count(),
+        "mis": lambda: mis.maximal_independent_set(spark, edges).count(),
+        "coloring": lambda: coloring.greedy_coloring(spark, edges).count(),
+        # one phase: the phase loop's own truncations would also record
+        # an iteration 3
+        "louvain": lambda: louvain.louvain(spark, edges, max_phases=1).count(),
     }[operator]
     plan = _superstep_plan(monkeypatch, run)
     # from superstep 3 the state is a checkpoint, so every cache scan left

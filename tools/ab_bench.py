@@ -5,7 +5,9 @@ Runs ``perfbench/run.py`` from checkout A and checkout B in ABBA order
 workload and seed, so drift on the host (load from neighbours, steal)
 falls on both sides alike. For every end-to-end metric declared in A's
 ``BENCHMARK.json`` it prints each side's median and quartiles, B's median
-over A's, and in how many pairs B beat A. Every run lasts the
+over A's, and in how many pairs B beat A; then the same for each query's
+wall (each run's per-query median, from the ``queries`` field of
+``perfbench/run.py``'s detail line). Every run lasts the
 ``run_seconds`` that A's ``BENCHMARK.json`` declares. Each checkout runs
 its own benchmark code against its own package; nothing in either tree
 is changed beyond what ``perfbench/run.py`` writes under
@@ -72,6 +74,21 @@ def report(metrics: list[dict], pairs: list[dict]) -> list[str]:
         (a1, a2, a3), (b1, b2, b3) = quartiles(a), quartiles(b)
         out.append(
             f"{name:<10} {a2:>9.3f} [{a1:7.3f}, {a3:7.3f}] {b2:>9.3f} [{b1:7.3f}, {b3:7.3f}] "
+            f"{b2 / a2 if a2 else float('nan'):>6.3f} {wins:>3}/{len(pairs):<3}"
+        )
+    queries = sorted(
+        set.intersection(*(set(p[s]["detail"]["queries"]) for p in pairs for s in "ab"))
+    )
+    out.append(
+        f"{'query wall_s':<28} {'A median':>9} {'B median':>9} {'B/A':>6} {'B wins':>7}"
+    )
+    for q in queries:
+        a = [p["a"]["detail"]["queries"][q]["median"] for p in pairs]
+        b = [p["b"]["detail"]["queries"][q]["median"] for p in pairs]
+        wins = sum(y < x for x, y in zip(a, b))
+        a2, b2 = statistics.median(a), statistics.median(b)
+        out.append(
+            f"{q:<28} {a2:>9.3f} {b2:>9.3f} "
             f"{b2 / a2 if a2 else float('nan'):>6.3f} {wins:>3}/{len(pairs):<3}"
         )
     fa = sum(p["a"]["failed"] for p in pairs)
