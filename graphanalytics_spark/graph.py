@@ -234,13 +234,15 @@ def vertex_following_contract(spark, edges_canon: DataFrame):
     from graphanalytics_spark.operators.contraction import (
         contract_graph,
         renumber_labels,
+        renumber_map,
     )
 
     labels = vertex_following(edges_canon).select(
         "vid", F.col("rep").alias("label")
     )
-    collapsed = contract_graph(spark, edges_canon, labels)
-    v2c = renumber_labels(labels)  # (vid, cid) over ALL original vertices
+    ren = renumber_map(labels)  # one renumbering for both outputs
+    collapsed = contract_graph(spark, edges_canon, labels, ren)
+    v2c = renumber_labels(labels, ren)  # (vid, cid) over ALL original vertices
     return collapsed, v2c
 
 

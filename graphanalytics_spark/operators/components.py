@@ -81,7 +81,8 @@ def connected_components(
         # static side partitioned on the gather key once — per round only the
         # vertex-state table is exchanged (same policy as pagerank)
         sym = loop.static(symmetrize(detach(edges_canon)).select("src", "dst"))
-        n_edges = sym.count()
+        # the metrics rows' edge column: a job, so only when metered
+        n_edges = sym.count() if metrics is not None else 0
         init_state = loop.cache(initial_labels(sym, initial_state))
 
         def step(state: DataFrame) -> DataFrame:

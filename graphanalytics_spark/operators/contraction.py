@@ -31,22 +31,28 @@ def renumber_map(labels: DataFrame) -> DataFrame:
     return dense_ids(labels, "label", "cid")
 
 
-def renumber_labels(labels: DataFrame) -> DataFrame:
+def renumber_labels(labels: DataFrame, ren: DataFrame | None = None) -> DataFrame:
     """Dense 0..k-1 relabeling of community ids: (vid, label) → (vid, cid).
     dense_rank over distinct labels keeps ordering stable (smaller original
-    label → smaller cid), matching the reference's deterministic renumber."""
-    return labels.join(F.broadcast(renumber_map(labels)), "label").select(
-        "vid", "cid"
-    )
+    label → smaller cid), matching the reference's deterministic renumber.
+    ``ren`` is ``renumber_map(labels)`` when the caller already built it
+    (each build is an eager pass plus a driver collect)."""
+    if ren is None:
+        ren = renumber_map(labels)
+    return labels.join(F.broadcast(ren), "label").select("vid", "cid")
 
 
 def contract_graph(
-    spark: SparkSession, edges_canon: DataFrame, labels: DataFrame
+    spark: SparkSession,
+    edges_canon: DataFrame,
+    labels: DataFrame,
+    ren: DataFrame | None = None,
 ) -> DataFrame:
     """edges_canon(src,dst,weight) + labels(vid,label) →
     contracted canonical edge table (src,dst,weight) over community ids,
-    self-loops kept (src==dst allowed in the output)."""
-    lab = renumber_labels(labels)
+    self-loops kept (src==dst allowed in the output). ``ren`` as in
+    ``renumber_labels``."""
+    lab = renumber_labels(labels, ren)
     lsrc = lab.select(F.col("vid").alias("src"), F.col("cid").alias("c_src"))
     ldst = lab.select(F.col("vid").alias("dst"), F.col("cid").alias("c_dst"))
     relabeled = (

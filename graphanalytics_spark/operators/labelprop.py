@@ -54,7 +54,8 @@ def label_propagation(
         # leaf input plan: the caller's plan stays out of every sweep's plan;
         # static side partitioned on the gather key once (pagerank policy)
         sym = loop.static(symmetrize(detach(edges_canon)))
-        n_edges = sym.count()
+        # the metrics rows' edge column: a job, so only when metered
+        n_edges = sym.count() if metrics is not None else 0
         init_state = loop.cache(initial_labels(sym, initial_state))
 
         def step(state: DataFrame) -> DataFrame:

@@ -37,6 +37,14 @@ Scale notes: each move round is two joins + two aggregations over the
 table after the first contraction. Contraction shrinks the graph
 geometrically, so phase k costs a fraction of phase k-1 — the same
 economics the reference exploits by re-running merged graphs on one card.
+Besides its rounds a phase runs two small actions, both on its own graph:
+one aggregation over the cached degree table (NV, NE, 2m and the singleton
+partition's Q, the starting Q of phase 1) and the Q of its labels.
+Contraction keeps every in_c, tot_c and 2m, so that Q equals the composed
+mapping's Q on the original graph but costs O(|E_k|), not O(|E_0|). Only a
+phase that another phase follows, or that a phase checkpointer snapshots,
+is contracted, with one dense renumbering shared by the contracted graph
+and the mapping.
 """
 
 from __future__ import annotations
@@ -46,9 +54,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.operators.contraction import contract_graph
+from graphanalytics_spark.operators.contraction import contract_graph, renumber_map
 from graphanalytics_spark.operators.mis import local_minima
-from graphanalytics_spark.operators.modularity import modularity
+from graphanalytics_spark.operators.modularity import from_sums, modularity
 from graphanalytics_spark.plans.superstep import Supersteps, count_where
 from graphanalytics_spark.plans.truncate import LineageTruncator, detach
 
@@ -58,9 +66,11 @@ def _one_phase(
     edges_canon: DataFrame,
     max_rounds: int,
     seed: int,
-) -> tuple[DataFrame, int]:
+) -> tuple[DataFrame, int, dict]:
     """One Louvain level over the given graph (self-loops allowed in
-    ``edges_canon``). Returns (labels(vid,label), rounds_used)."""
+    ``edges_canon``). Returns (labels(vid,label), rounds_used, stats):
+    ``stats`` holds the graph's ``nv``, ``ne`` and ``q0``, the Q of its
+    singleton partition."""
     # hard parquet reset every 8 rounds (was 2, then 4): the desire-set
     # checkpoint below keeps the per-round lazy chains short, so frequent
     # hard resets only add parquet round-trips (measured ~1.3 s/round at
@@ -80,24 +90,46 @@ def _one_phase(
         self_w = edges_canon.filter(F.col("src") == F.col("dst")).select(
             F.col("src").alias("vid"), F.col("weight").alias("self_w")
         )
-        # weighted degree incl. self-loops (counted twice per Louvain convention)
+        # weighted degree incl. self-loops (counted twice per Louvain
+        # convention). The outer join keeps a vertex whose only edge is a
+        # self-loop — a contracted community with no edge to another one —
+        # so it keeps its label instead of dropping out of the mapping.
         deg = loop.cache(
             sym.groupBy(F.col("src").alias("vid"))
-            .agg(F.sum("weight").alias("wdeg"))
-            .join(self_w, "vid", "left")
+            .agg(F.sum("weight").alias("wdeg"), F.count("*").alias("n_sym"))
+            .join(self_w, "vid", "full")
             .select(
                 "vid",
-                (F.col("wdeg") + 2 * F.coalesce("self_w", F.lit(0.0))).alias("wdeg"),
+                (
+                    F.coalesce("wdeg", F.lit(0.0))
+                    + 2 * F.coalesce("self_w", F.lit(0.0))
+                ).alias("wdeg"),
+                "self_w",
+                "n_sym",
             )
         )
-        # 2m = twice the total weight (sym doubles non-self edges, self-loops
-        # count twice by convention) — ONE tiny aggregation on the canonical
-        # table instead of two driver actions
-        two_m = 2 * (edges_canon.agg(F.sum("weight")).first()[0] or 0.0)
+        # ONE action for the graph's bookkeeping, which also fills the
+        # deg cache: NV, NE (sym holds each non-self edge twice), 2m = Σ
+        # wdeg, and the singleton partition's Q (in_c = 2·self_w, tot_c =
+        # wdeg) — no label join
+        r = deg.agg(
+            F.count("*").alias("nv"),
+            F.sum("n_sym").alias("n_sym"),
+            F.count("self_w").alias("n_self"),
+            F.sum("wdeg").alias("two_m"),
+            F.sum("self_w").alias("self_w"),
+            F.sum(F.col("wdeg") * F.col("wdeg")).alias("tot_sq"),
+        ).first()
+        two_m = r["two_m"] or 0.0
+        stats = {
+            "nv": int(r["nv"]),
+            "ne": int(r["n_sym"] or 0) // 2 + int(r["n_self"]),
+            "q0": from_sums(2 * (r["self_w"] or 0.0), r["tot_sq"], two_m),
+        }
         if two_m == 0:
             # eager: the labels must outlive the cached deg they are read from
             out = deg.select("vid", F.col("vid").alias("label"))
-            return out.localCheckpoint(eager=True), 0
+            return out.localCheckpoint(eager=True), 0, stats
 
         state = loop.truncator.truncate(
             deg.select("vid", F.col("vid").alias("label"), "wdeg"), 0, stream="state"
@@ -198,7 +230,7 @@ def _one_phase(
             )
 
         state, rounds_used, _ = loop.run(state, step, count_where("changed"), 0)
-        return state.select("vid", "label"), rounds_used
+        return state.select("vid", "label"), rounds_used, stats
 
 
 def louvain(
@@ -230,8 +262,6 @@ def louvain(
     continues from the latest snapshot instead of phase 1 and, because
     every phase is deterministic given ``seed``, reproduces the
     uninterrupted run's result exactly."""
-    from graphanalytics_spark.operators.contraction import renumber_map
-
     if vertex_following:
         from graphanalytics_spark.graph import (
             compose_through,
@@ -259,9 +289,11 @@ def louvain(
     truncator = LineageTruncator(spark, hard_every=8)
     g = edges_canon
     mapping = None  # original vid -> current community id space of g
+    # lazy: read only when no phase improves on the singleton partition
     best_mapping = _identity_labels(edges_canon).select(
         "vid", F.col("label").alias("community")
     )
+    best_q = None  # phase 1 starts from its graph's singleton Q
     start_phase = 1
     if resume and phase_checkpointer is not None:
         snap = phase_checkpointer.load()
@@ -269,16 +301,18 @@ def louvain(
             g, mapping, best_mapping, meta = snap
             best_q = meta["best_q"]
             start_phase = meta["phase"] + 1
-    if start_phase == 1:
-        best_q = modularity(
-            spark,
-            edges_canon,
-            best_mapping.select("vid", F.col("community").alias("label")),
-        )
 
     for phase in range(start_phase, max_phases + 1):
         t0 = time.monotonic()
-        labels, rounds = _one_phase(spark, g, max_rounds_per_phase, seed + 1000 * phase)
+        labels, rounds, st = _one_phase(
+            spark, g, max_rounds_per_phase, seed + 1000 * phase
+        )
+        if best_q is None:
+            best_q = st["q0"]
+        # Q on the phase graph: contraction keeps every in_c, tot_c and 2m,
+        # so with integer weights this is bit for bit the composed
+        # mapping's Q on the original graph, at O(|E_k|) instead of O(|E_0|)
+        q = modularity(spark, g, labels)
         # compose mapping: C_orig[v] = C[C_orig[v]]
         # (PhaseLoop_UpdatingC_org, louvainMultiPhaseRun.cpp:54-68).
         # mapping.community lives in g's vertex-id space, which is exactly
@@ -292,40 +326,27 @@ def louvain(
                 )
                 .select("vid", F.col("label").alias("community"))
             )
-        mapping = truncator.truncate(mapping, phase)
-        q = modularity(
-            spark,
-            edges_canon,
-            mapping.select("vid", F.col("community").alias("label")),
-        )
-        nv = ne = None
-        if metrics is not None or min_graph_size > 0:
-            # one action for (NV, NE): distinct endpoints and row count
-            # from the same exploded pass (previously two jobs)
-            r = (
-                g.select(F.explode(F.array("src", "dst")).alias("v"))
-                .agg(F.countDistinct("v").alias("nv"), F.count("*").alias("n2"))
-                .first()
-            )
-            nv, ne = int(r["nv"]), int(r["n2"]) // 2
         if metrics is not None:
             metrics.append(
                 {
                     "phase": phase,
                     "Q": q,
-                    "n_vertices": nv,
-                    "n_edges": ne,
+                    "n_vertices": st["nv"],
+                    "n_edges": st["ne"],
                     "rounds": rounds,
                     "wall_s": time.monotonic() - t0,
                 }
             )
         improved = q - best_q >= min_gain
         if q > best_q:
+            mapping = truncator.truncate(mapping, phase)
             best_q, best_mapping = q, mapping
         if not improved:
             break  # keep the best mapping seen (a worse phase is discarded)
-        if min_graph_size > 0 and nv is not None and nv <= min_graph_size:
+        if min_graph_size > 0 and st["nv"] <= min_graph_size:
             break  # graph too small to be worth another level
+        if phase == max_phases and phase_checkpointer is None:
+            break  # no level reads the contracted graph (louvainPhase.cpp:2187-2196)
         # contract for the next level (keeps self-loops); contraction
         # renumbers communities densely, so re-express the mapping in the
         # contracted id space with the same renumbering. The remap key is
@@ -333,8 +354,8 @@ def louvain(
         # equal the vid of any vertex still carrying it), so join against
         # the label→cid rank table — joining a vid-keyed table here would
         # silently misroute communities whose eponymous vertex moved away.
-        ren = renumber_map(labels)  # label -> cid (dense), same ranks
-        g = truncator.truncate(contract_graph(spark, g, labels), phase)
+        ren = renumber_map(labels)  # label -> cid (dense); the contraction reuses it
+        g = truncator.truncate(contract_graph(spark, g, labels, ren), phase)
         mapping = (
             mapping.join(
                 F.broadcast(ren), mapping.community == ren.label

@@ -21,8 +21,10 @@ def modularity(
     spark: SparkSession, edges_canon: DataFrame, labels: DataFrame
 ) -> float:
     """labels: DataFrame(vid, label). Returns Q as a Python float.
-    Self-loops in the canonical table are excluded by construction
-    (graph.canonicalize drops them)."""
+    A self-loop (graph.canonicalize drops them; contraction keeps a
+    community's inner weight as one) counts twice in in_c, tot_c and 2m,
+    the Louvain convention, so labels on a contracted graph get the Q of
+    the composed labels on the original graph."""
     sym = symmetrize(edges_canon)
     lsrc = labels.select(F.col("vid").alias("src"), F.col("label").alias("c_src"))
     ldst = labels.select(F.col("vid").alias("dst"), F.col("label").alias("c_dst"))
@@ -59,9 +61,14 @@ def modularity(
         )
         .first()
     )
-    two_m = row["two_m"]
+    return from_sums(row["in_w"], row["tot_sq"], row["two_m"])
+
+
+def from_sums(in_w: float | None, tot_sq: float | None, two_m: float | None) -> float:
+    """Q from its three sufficient statistics: Σ_c in_c, Σ_c tot_c² and
+    2m (None reads as 0; an edgeless graph has Q = 0)."""
     if not two_m:
         return 0.0
-    in_w = row["in_w"] or 0.0
-    tot = row["tot_sq"] or 0.0
+    in_w = in_w or 0.0
+    tot = tot_sq or 0.0
     return float(in_w / two_m - tot / (two_m * two_m))

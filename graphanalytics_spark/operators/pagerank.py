@@ -206,7 +206,8 @@ def _pagerank(
     DataFrame(vid, rank)."""
     edges = detach(edges)
     links = gather.links(loop, edges)
-    n_links = links.count()
+    # the metrics rows' edge column: a job, so only when metered
+    n_links = links.count() if loop.metrics is not None else 0
     # vertex set + static dangling flag (no out-edges) in ONE aggregation:
     # the previous shape (union-distinct + distinct + join) cost two
     # distinct shuffles and a join for the same table (guide §2.4)

@@ -167,3 +167,51 @@ def test_louvain_phase_checkpoint_resume_identical(spark, tmp_path):
         ).collect()
     )
     assert resumed == full
+
+
+def _triangle_ring_plus_isolated_triangle(n=40):
+    """A ring of ``n`` triangles and one triangle (1000-1002) with no edge
+    to the ring: from phase 2 on its community is a vertex whose only
+    edge is a self-loop."""
+    edges = []
+    for t in range(n):
+        a, b, c = 3 * t, 3 * t + 1, 3 * t + 2
+        edges += [(a, b), (b, c), (a, c), (c, 3 * ((t + 1) % n))]
+    return edges + [(1000, 1001), (1001, 1002), (1000, 1002)]
+
+
+def test_louvain_keeps_self_loop_only_communities(spark):
+    """Every input vertex is returned exactly once, also when a later
+    phase sees a community with no edge to another one, and the best
+    phase Q is the returned mapping's Q on the original graph."""
+    from tests.oracles import modularity_np
+
+    ec = graph.canonicalize(
+        fixtures.edges_df(spark, _triangle_ring_plus_isolated_triangle())
+    )
+    mets = []
+    rows = louvain.louvain(spark, ec, metrics=mets, max_phases=4).collect()
+    assert len(mets) >= 2, mets
+    vids = [r.vid for r in rows]
+    canon = [(r.src, r.dst, r.weight) for r in ec.collect()]
+    assert sorted(vids) == sorted({v for e in canon for v in e[:2]})
+    labels = {r.vid: r.community for r in rows}
+    assert max(m["Q"] for m in mets) == pytest.approx(
+        modularity_np(canon, labels), abs=1e-12
+    )
+
+
+def test_louvain_last_phase_does_not_contract(spark, monkeypatch):
+    """Without a checkpointer, a contraction after the last phase has no
+    reader: a one-phase run never renumbers or contracts."""
+
+    def unexpected(*args, **kwargs):
+        raise AssertionError("contracted after the last phase")
+
+    monkeypatch.setattr(louvain, "contract_graph", unexpected)
+    monkeypatch.setattr(louvain, "renumber_map", unexpected, raising=False)
+    pairs, _, _ = _islands()
+    ec = graph.canonicalize(fixtures.edges_df(spark, pairs))
+    mets = []
+    assert louvain.louvain(spark, ec, metrics=mets, max_phases=1).count() == 48
+    assert [m["phase"] for m in mets] == [1]

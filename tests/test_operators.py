@@ -501,3 +501,33 @@ def test_checkpoint_every_below_one_is_rejected(spark, rgraph, call, knob):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("cadence_check")) == []
+
+
+def test_unmetered_components_skip_the_edge_count(spark, rgraph):
+    """The static side is counted only to fill the metrics rows: a call
+    without ``metrics`` runs fewer jobs than a metered one and returns
+    the same components."""
+    from graphanalytics_spark.plans.superstep import IterationMetrics
+
+    sc = spark.sparkContext
+
+    def run(group, metrics):
+        sc.setJobGroup(group, group)
+        try:
+            rows = sorted(
+                tuple(r)
+                for r in components.connected_components(
+                    spark, rgraph[0], metrics=metrics
+                ).collect()
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    run("cc_warmup", None)  # a session's first call can run one more job
+    metrics = IterationMetrics()
+    metered, metered_jobs = run("cc_metered", metrics)
+    plain, plain_jobs = run("cc_unmetered", None)
+    assert plain == metered
+    assert metrics.total_edges_traversed > 0
+    assert plain_jobs < metered_jobs
